@@ -20,24 +20,34 @@ import org.apache.spark.sql.functions._
   * trig, no IEEE drift). Distances are squared Euclidean in those units.
   *
   * Scale shape (100 TB): one shuffle on (cell_x, cell_y); candidate work is
-  * Σ_cells 9·|A∩cell|·|B∩cell| — bounded by the data's spatial density, never
-  * n². Pick `cellSize` from the target radius (the 3×3 cover needs
-  * radius ≤ cellSize; much larger wastes candidates). Dense-city cell skew is
-  * ordinary join-key skew: AQE skew-join splits it, or sub-split hot cells by
-  * hashing the probe side (the q_skew_join salting precedent).
+  * Σ_cells c·|A∩cell|·|B∩cell|, where c is 5 neighbor cells for the
+  * unordered self-join and 9 (the 3×3 cover) otherwise — bounded by the
+  * data's spatial density, never n². Pick `cellSize` from the target
+  * radius (both covers need radius ≤ cellSize; much larger wastes
+  * candidates). Dense-city cell skew is ordinary join-key skew: AQE
+  * skew-join splits it, or sub-split hot cells by hashing the probe side
+  * (the q_skew_join salting precedent).
   */
 object Geo {
+
+  /** Both neighbor covers are exact only for radius2 ≤ cellSize². The
+    * square is taken in BigInt: in Long it wraps above cellSize ≈ 3.04e9. */
+  private def requireCover(cellSize: Long, radius2: Long): Unit =
+    require(radius2 > 0 && BigInt(cellSize) * cellSize >= radius2,
+      s"neighbor-cell cover needs 0 < radius2 <= cellSize^2, " +
+        s"got radius2=$radius2 cellSize=$cellSize")
 
   private def withCells(df: DataFrame, cellSize: Long): DataFrame =
     df.withColumn("cell_x", expr(s"x DIV ${cellSize}L"))
       .withColumn("cell_y", expr(s"y DIV ${cellSize}L"))
 
-  /** All pairs within `radius` (squared-Euclidean), via 3×3 neighbor-cell
+  /** All pairs within `radius` (squared-Euclidean), via neighbor-cell
     * blocking. Build side keeps its home cell; probe side replicates each
-    * point to its home cell plus the 8 surrounding cells, so a qualifying
-    * pair meets in EXACTLY one cell (the build point's home) — no
-    * post-join dedup needed. Coverage is exact, not approximate: dist ≤
-    * radius ≤ cellSize forces |cell delta| ≤ 1 per axis.
+    * point to neighbor cells — the 5-offset canonical-cell cover for the
+    * unordered form, the full 3×3 cover for the ordered one (see
+    * [[neighborPairs2]]) — and the join's key predicate keeps each pair
+    * exactly once. Coverage is exact, not approximate: dist ≤ radius ≤
+    * cellSize forces |cell delta| ≤ 1 per axis.
     *
     * `ordered=false` → each unordered pair once (key_a < key_b);
     * `ordered=true` → both directions (key_a ≠ key_b), the kNN feed.
@@ -45,7 +55,7 @@ object Geo {
   def neighborPairs(points: DataFrame, cellSize: Long, radius: Long,
       ordered: Boolean = false): DataFrame = {
     require(radius > 0, s"radius must be positive, got $radius")
-    neighborPairs2(points, cellSize, radius * radius, ordered)
+    neighborPairs2(points, cellSize, Math.multiplyExact(radius, radius), ordered)
   }
 
   /** [[neighborPairs]] with the threshold given as SQUARED distance —
@@ -67,9 +77,7 @@ object Geo {
     if (ordered)
       return blockedJoin(points, points, cellSize, radius2,
         col("key_a") =!= col("key_b"))
-    require(radius2 > 0 && cellSize * cellSize >= radius2,
-      s"3x3 neighbor cover needs 0 < radius2 <= cellSize^2, " +
-        s"got radius2=$radius2 cellSize=$cellSize")
+    requireCover(cellSize, radius2)
     val build = withCells(points, cellSize).select(
       col("key").as("key_a"), col("x").as("xa"), col("y").as("ya"),
       col("cell_x"), col("cell_y"))
@@ -108,7 +116,7 @@ object Geo {
   def bipartitePairs(left: DataFrame, right: DataFrame, cellSize: Long,
       radius: Long): DataFrame = {
     require(radius > 0, s"radius must be positive, got $radius")
-    blockedJoin(left, right, cellSize, radius * radius, lit(true))
+    blockedJoin(left, right, cellSize, Math.multiplyExact(radius, radius), lit(true))
   }
 
   /** Per left-side point, the single nearest right-side point within
@@ -126,9 +134,7 @@ object Geo {
 
   private def blockedJoin(left: DataFrame, right: DataFrame, cellSize: Long,
       radius2: Long, keyPred: org.apache.spark.sql.Column): DataFrame = {
-    require(radius2 > 0 && cellSize * cellSize >= radius2,
-      s"3x3 neighbor cover needs 0 < radius2 <= cellSize^2, " +
-        s"got radius2=$radius2 cellSize=$cellSize")
+    requireCover(cellSize, radius2)
     val build = withCells(left, cellSize).select(
       col("key").as("key_a"), col("x").as("xa"), col("y").as("ya"),
       col("cell_x"), col("cell_y"))
@@ -169,7 +175,7 @@ object Geo {
     * without any all-pairs work or sequential region growing.
     *
     *  - ε-neighborhoods come from ONE [[neighborPairs]] grid-blocked join
-    *    (candidates Σ9·|cell|², never n²);
+    *    (candidates Σ5·|cell|², never n²);
     *  - core test (|N_ε(p)| ≥ minPts, the point itself counted) is a
     *    map-side-combinable degree count over the pair list;
     *  - clusters are the connected components of the CORE-CORE ε-graph —

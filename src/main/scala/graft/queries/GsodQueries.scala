@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * pipeline ran only in unit tests; here the driver replays the whole
   * ETL against DuckDB arithmetic every round. q_gsod_tar replays the
   * SAME corpus through the archive path (ustar members, half gzipped),
-  * so [[GsodParser.parseTar]]'s member iteration + executor gunzip is
-  * hash-gated too, not just spec'd (TarArchiveProps).
+  * so [[GsodParser.parseTar]]'s member iteration and executor gunzip are
+  * hash-gated too, not just spec'd (TarArchiveProps);
+  * both gates parse lines with the one [[GsodParser.parseLine]].
   *
   * Fixture discipline (the q_png_decode precedent): the corpus is built
   * from doc_id arithmetic — every observation line is a real 22-token
@@ -207,8 +208,9 @@ object GsodQueries {
     * gzipped (`.op.gz`), odd stations raw (`.op`), plus a README member
     * the suffix filter must skip — then read back through
     * [[GsodParser.parseTar]] (binaryFiles → member iteration → executor
-    * gunzip → parseLines) and the same ETL. Three archives so the
-    * per-archive parallelism grain actually fans out.
+    * gunzip → parseLine) and the same ETL. Three archives, so the read
+    * crosses archive boundaries; they are far below binaryFiles' split
+    * size, so one task may read all three.
     *
     * The driver-side collect here is the fixture BUILDER (bounded by the
     * gate's sf corpus), not the operator: parseTar itself runs

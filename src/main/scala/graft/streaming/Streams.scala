@@ -165,7 +165,7 @@ object Streams {
     * raw fixed-layout text lines arrive as a stream (a file tail, a
     * socket, an archive unpacker's output) and flow through the EXACT
     * batch parse — [[graft.ingest.GsodParser.parseLines]] is a stateless
-    * projection/filter, plan-identical under micro-batching — into a
+    * per-line typed flatMap, plan-identical under micro-batching — into a
     * per-station-month rollup.
     *
     * The rollup aggregate differs from batch BY DESIGN: the reference's

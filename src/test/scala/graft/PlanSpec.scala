@@ -575,7 +575,8 @@ class PlanSpec extends SparkSpec {
   test("distinct-value cumsum queries plan no global window (cvm, rank_biserial)") {
     // r12: these cumulative-distribution walks run over distinct-value
     // frames that grow with the value domain — the prefix sums come from
-    // globalCumsum's triangular broadcast, never a single-task window
+    // globalCumsum's literal cutpoint-bucket offsets, never a single-task
+    // window
     for (q <- Seq("q_cvm", "q_rank_biserial", "q_spearman", "q_kruskal",
         "q_wilcoxon", "q_mann_whitney", "q_lorenz_gini")) {
       val df = SparkEntry.queries(q)(spark, Sf001)

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Grid-blocked spatial operators: exactness of the 3×3 cover against a
+/** Grid-blocked spatial operators: exactness of the neighbor covers against a
   * brute-force reference, pair uniqueness (a pair must meet in exactly one
   * cell), kNN ranking, and the radius ≤ cellSize contract. */
 class GeoSpec extends SparkSpec {
@@ -141,6 +141,26 @@ class GeoSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] { // radius2 > cellSize² too
       Geo.neighborPairs2(pointsDf(Seq((1L, 0L, 0L))), 10L, 101L)
+    }
+  }
+
+  test("cover guard is exact where cellSize squared overflows Long") {
+    // 3037000500² exceeds Long.MaxValue and 3037000499² does not: a guard
+    // that squares in Long wraps negative at the first and rejects a valid
+    // call
+    val pts = pointsDf(Seq((1L, 0L, 0L), (2L, 3L, 4L)))
+    for (cell <- Seq(3037000500L, 4000000000L, Long.MaxValue)) {
+      val got = Geo.neighborPairs(pts, cell, 5L).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got === Set((1L, 2L, 25L)), s"cellSize=$cell")
+      assert(Geo.bipartitePairs(pts, pts, cell, 5L).count() === 4)
+    }
+    Geo.neighborPairs2(pts, 3037000500L, Long.MaxValue) // cellSize² > radius2
+    intercept[IllegalArgumentException] {
+      Geo.neighborPairs2(pts, 3037000499L, Long.MaxValue)
+    }
+    intercept[ArithmeticException] { // radius² itself overflows
+      Geo.neighborPairs(pts, Long.MaxValue, 3037000500L)
     }
   }
 
