@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructType}
 
 /** Index of the squared-L2-nearest centroid — the IVF coarse-quantizer
   * assignment as a codegen'd Expression. The centroid table rides along as
@@ -70,4 +70,129 @@ object NearestCentroid {
   def nearest_centroid(v: Column, centroids: Array[Array[Double]]): Column =
     org.apache.spark.sql.graftbridge.Bridge.toCol(
       NearestCentroid(org.apache.spark.sql.graftbridge.Bridge.toExpr(v), centroids))
+}
+
+/** Id of the nearest centroid by 6-decimal-ROUNDED squared L2 — the
+  * engine-portable assignment [[graft.ops.Similarity.semDedup]] clusters
+  * by, as one codegen'd per-row argmin. `centroids` is a column holding
+  * the whole centroid table as one list of `struct(cid, cvec)` sorted by
+  * cid (a one-row broadcast in the plan, so the k·dim doubles ship once
+  * per executor, not once per row).
+  *
+  * Bit-identical to the SQL form
+  * `min(struct(round(aggregate(zip_with(v, c, (x, y) -> (x − y)²), 0.0,
+  * (acc, x) -> acc + x), 6), cid))` over a cross join with the centroids:
+  *  - the distance sums left to right from 0.0, as `aggregate` does;
+  *  - rounding is Spark's `round(x, 6)` — HALF_UP on the double's
+  *    shortest decimal string, NaN and ±Inf unchanged;
+  *  - a NULL element in either vector makes that distance NULL, and NULL
+  *    orders first, as in struct ordering;
+  *  - doubles compare with Spark's SQL ordering (NaN largest, NaN = NaN,
+  *    −0.0 = 0.0), and a tie keeps the earlier centroid — the lowest cid.
+  * A vector whose length differs from a centroid's is a data error and
+  * raises (the SQL form would silently score it NULL), like
+  * [[CosineSim]]'s length check. An empty centroid list gives NULL.
+  */
+case class NearestCentroidId(vec: Expression, centroids: Expression)
+    extends BinaryExpression {
+
+  override def left: Expression = vec
+  override def right: Expression = centroids
+
+  private def cidType: DataType = centroids.dataType.asInstanceOf[ArrayType]
+    .elementType.asInstanceOf[StructType].head.dataType
+
+  override def dataType: DataType = cidType
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (vec.dataType, centroids.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(st: StructType, _))
+          if st.length == 2 && st(1).dataType.isInstanceOf[ArrayType] &&
+            st(1).dataType.asInstanceOf[ArrayType].elementType == DoubleType =>
+        TypeCheckResult.TypeCheckSuccess
+      case (v, c) => TypeCheckResult.TypeCheckFailure(
+        "nearest_centroid_id needs (array<double>, " +
+          s"array<struct<cid, array<double>>>), got $v, $c")
+    }
+
+  override def nullSafeEval(v: Any, cs: Any): Any = {
+    val centroidList = cs.asInstanceOf[ArrayData]
+    val best = NearestCentroidId.argmin(v.asInstanceOf[ArrayData], centroidList)
+    if (best < 0) null
+    else {
+      val c = centroidList.getStruct(best, 2)
+      if (c.isNullAt(0)) null else c.get(0, cidType)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val best = ctx.freshName("best")
+    val c = ctx.freshName("centroid")
+    nullSafeCodeGen(ctx, ev, (v, cs) => s"""
+      int $best = graft.functions.NearestCentroidId.argmin($v, $cs);
+      if ($best < 0) {
+        ${ev.isNull} = true;
+      } else {
+        InternalRow $c = $cs.getStruct($best, 2);
+        if ($c.isNullAt(0)) {
+          ${ev.isNull} = true;
+        } else {
+          ${ev.value} = ${CodeGenerator.getValue(c, cidType, "0")};
+        }
+      }
+    """)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(vec = l, centroids = r)
+}
+
+object NearestCentroidId {
+
+  /** Spark's `round(d, 6)` on a double: HALF_UP on the shortest decimal
+    * representation (`BigDecimal.valueOf`), NaN and ±Inf unchanged. */
+  def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Index of the winning centroid in `centroids` (see the class doc for
+    * the order), or −1 for an empty list. */
+  def argmin(v: ArrayData, centroids: ArrayData): Int = {
+    val n = v.numElements()
+    var vHasNull = false
+    var i = 0
+    while (i < n) { if (v.isNullAt(i)) vHasNull = true; i += 1 }
+    var best = -1
+    var bestNull = false
+    var bestD = 0.0
+    var c = 0
+    while (c < centroids.numElements()) {
+      val cv = centroids.getStruct(c, 2).getArray(1)
+      require(cv.numElements() == n,
+        s"nearest_centroid_id: vector length $n vs centroid length ${cv.numElements()}")
+      var isNull = vHasNull
+      var d = 0.0
+      i = 0
+      while (i < n && !isNull) {
+        if (cv.isNullAt(i)) isNull = true
+        else { val t = v.getDouble(i) - cv.getDouble(i); d += t * t }
+        i += 1
+      }
+      if (!isNull) d = round6(d)
+      val better =
+        if (best < 0) true
+        else if (isNull) !bestNull
+        else !bestNull && SQLOrderingUtil.compareDoubles(d, bestD) < 0
+      if (better) { best = c; bestNull = isNull; bestD = d }
+      c += 1
+    }
+    best
+  }
+
+  def nearest_centroid_id(v: Column, centroids: Column): Column =
+    org.apache.spark.sql.graftbridge.Bridge.toCol(NearestCentroidId(
+      org.apache.spark.sql.graftbridge.Bridge.toExpr(v),
+      org.apache.spark.sql.graftbridge.Bridge.toExpr(centroids)))
 }

@@ -49,33 +49,44 @@ object Dedup {
 
   /** E2 exact path: similar pairs inside a blocking key (e.g. lang), scored
     * by shingle-set Jaccard — computed via an INVERTED INDEX, not a blocked
-    * cross join: explode (block, shingle, doc) postings, equi-join postings
-    * on (block, shingle), count common shingles per pair, then
-    * jac = common / (|A| + |B| − common).
+    * cross join: explode (block, shingle, doc) postings, group them into
+    * one posting list per (block, shingle), emit every doc pair inside
+    * each list ([[graft.functions.PostingPairs]]), count common shingles
+    * per pair, then jac = common / (|A| + |B| − common).
     *
     * Why: a blocked self-join is O(n² per block) string-array intersects —
-    * measured 156 s at sf0.1 and hopeless at 100 TB. The posting join's
-    * work is Σ_shingle df² (df = docs containing the shingle; 0.9 M at
-    * sf0.1 → sub-second) and every stage is an ordinary shuffle. Pairs
-    * sharing ZERO shingles never materialize — identical top-k/threshold
-    * results, since those pairs have jac = 0. Hot shingles (huge df) are
-    * the known skew risk; the 100 TB mitigation is prefix filtering or
-    * dropping df > cap shingles (cap makes jac approximate), or the LSH
-    * path below.
+    * measured 156 s at sf0.1 and hopeless at 100 TB. The posting lists'
+    * pair work is Σ_shingle df² (df = docs containing the shingle; 0.9 M
+    * at sf0.1 → sub-second), and the posting stream is read once and
+    * shuffled once (on its key, partial lists combined map-side). An
+    * equi-self-join of the postings would pay for the stream twice, each
+    * side re-exploding (and, capped, re-counting) its input: Spark with
+    * AQE never reuses an exchange above a cached input, and the callers'
+    * inputs are cached. Pairs sharing ZERO shingles never
+    * materialize — identical top-k/threshold results, since those pairs
+    * have jac = 0. Hot shingles (huge df) are the known skew risk; the
+    * 100 TB mitigation is the df cap below, prefix filtering, or the
+    * LSH path.
     *
     * `shingleCol` must hold DISTINCT shingles (callers array_distinct).
+    * The result is row-for-row the self-join's: duplicate postings pair
+    * as often as the join pairs them, and a NULL block key, shingle or id
+    * pairs with nothing (NULL never equi-joins and fails `id_a < id_b`).
     *
     * Output keeps the raw set sizes alongside jac — `common` (|A∩B|),
     * `sz_a`, `sz_b` — so asymmetric scores (containment |A∩B|/min|·|,
-    * overlap coefficients) derive from the SAME posting join instead of
+    * overlap coefficients) derive from the SAME pair count instead of
     * paying a second pass.
     *
     * `maxDf` is the hot-shingle document-frequency cap — the standard
-    * skew guard for posting joins: ONE Zipf-head shingle shared by m
-    * docs contributes m² join rows, so at real-corpus scale an uncapped
-    * join OOMs on exactly the shingles that carry the least similarity
-    * signal. Postings whose (block, shingle) df exceeds the cap are
-    * dropped BEFORE the self-join (work bounded by Σ_{df≤cap} df²);
+    * skew guard for posting lists: ONE Zipf-head shingle shared by m
+    * docs contributes m²/2 pairs, so at real-corpus scale an uncapped
+    * pass OOMs on exactly the shingles that carry the least similarity
+    * signal. A (block, shingle) key with more than `maxDf` postings
+    * contributes no pairs (work bounded by Σ_{df≤cap} df²). The lists are
+    * built by [[graft.functions.CappedCollectList]], which buffers at most
+    * `maxDf + 1` postings per key and returns NULL for a key over the
+    * cap, so memory is bounded by the cap, not by the hot shingle's df.
     * `common` then undercounts pairs that shared a capped shingle, so
     * jac becomes a LOWER bound of the true Jaccard — capped pairs are a
     * subset of exact pairs, any pair whose capped jac clears a threshold
@@ -84,42 +95,23 @@ object Dedup {
     * sizes. */
   def jaccardPairs(docs: DataFrame, id: String, shingleCol: String,
       blockCols: Seq[String], maxDf: Option[Int] = None): DataFrame = {
-    val allPosts = docs
+    val keyCols = blockCols :+ "__sh"
+    val posting = struct(col(id), col("__sz"))
+    val lists = docs
       .select((blockCols.map(col) :+ col(id) :+
         size(col(shingleCol)).as("__sz") :+
         explode(col(shingleCol)).as("__sh")): _*)
-    val posts = maxDf match {
-      case None => allPosts
-      case Some(cap) =>
-        require(cap >= 1, s"maxDf=$cap must be at least 1")
-        // df per (block, shingle): postings are distinct per doc, so a
-        // plain count (map-side combinable) is the document frequency.
-        // Filter by ANTI-joining against the shingles that EXCEED the cap,
-        // not inner-joining against the survivors: the hot set is the Zipf
-        // HEAD (≤ total_postings/cap keys by pigeonhole, tiny in practice)
-        // while the survivor set is nearly every distinct shingle — at
-        // corpus scale the survivor join's build side is itself corpus-
-        // sized. The broadcast hint is explicit: hot's size ESTIMATE
-        // derives from its full exploded child, so static planning would
-        // pick a shuffled anti-join (re-shuffling the whole posting
-        // stream — the exact cost the cap exists to avoid) and only
-        // maybe AQE-downgrade it; hinted, capped postings drop map-side
-        // with no extra exchange on the posting stream.
-        val hot = allPosts
-          .groupBy((blockCols :+ "__sh").map(col): _*)
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > cap)
-          .drop("__df")
-        allPosts.join(broadcast(hot), blockCols :+ "__sh", "left_anti")
-    }
-    def sided(side: String) =
-      posts.toDF(posts.columns.map {
-        case `id` => s"id_$side"
-        case "__sz" => s"sz_$side"
-        case c => c
-      }: _*)
-    sided("a").join(sided("b"), blockCols :+ "__sh")
-      .filter(col("id_a") < col("id_b"))
+      .filter(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
+      .groupBy(keyCols.map(col): _*)
+      .agg((maxDf match {
+        case None => collect_list(posting)
+        case Some(cap) =>
+          require(cap >= 1, s"maxDf=$cap must be at least 1")
+          graft.functions.CappedCollectList.capped_collect_list(posting, cap)
+      }).as("__pl"))
+    lists
+      .select((blockCols.map(col) :+
+        graft.functions.PostingPairs.posting_pairs(col("__pl"))): _*)
       .groupBy((blockCols :+ "id_a" :+ "id_b" :+ "sz_a" :+ "sz_b").map(col): _*)
       .agg(count(lit(1)).as("common"))
       .withColumn("jac",
@@ -138,7 +130,7 @@ object Dedup {
     * — below threshold. So the candidate set has NO false negatives, and
     * the join's work drops from Σ_token df² to Σ df_prefix², where
     * prefixes are by construction the RAREST tokens — the Zipf head that
-    * makes the unfiltered posting join explode is exactly what prefix
+    * makes the unfiltered posting lists explode is exactly what prefix
     * filtering never indexes. This is the exactness-preserving
     * alternative to [[jaccardPairs]]' maxDf cap (which turns jac into a
     * lower bound); the length filter t·|A| ≤ |B| ≤ |A|/t (exact integer
@@ -245,7 +237,7 @@ object Dedup {
     * only exchange in the plan is the pair aggregation, whose input is
     * just the matched candidate rows (Σ over shared shingles of
     * df_corpus · df_batch), not the corpus. Pairs sharing zero shingles
-    * never materialize, exactly as in the self-join form.
+    * never materialize, exactly as in [[jaccardPairs]].
     *
     * Output: (blockCols…, id_new, id_old, common, sz_new, sz_old, jac) —
     * one row per (incoming, corpus) pair sharing ≥ 1 shingle.
@@ -283,7 +275,7 @@ object Dedup {
   /** Sorted-neighborhood near-dup candidates (Hernández–Stolfo SNM): sort
     * the corpus by a canonical content key, compare each record only to
     * the next `w−1` in sorted order. The third classic blocking scheme
-    * next to the posting join (exact, Σ df² work) and LSH banding
+    * next to the posting lists (exact, Σ df² work) and LSH banding
     * (probabilistic) — `w−1` lead() taps and a bounded explode, with
     * near-identical records sorting adjacently by construction of the key.
     *

@@ -86,19 +86,28 @@ object Ranks {
     * sorted by key — O(log n) codegen'd compares per row, the
     * [[bucketOf]] shape for attaching a small driver-computed lookup
     * (bucket offsets) as plan literals instead of a broadcast join.
-    * Every probed key must be present (probes are bucket ids that came
-    * from the same data the entries were aggregated from); an empty
-    * entry list yields `default`. */
-  private def literalLookup(key: Column,
+    * Every probed key must be present: probes are bucket ids of the same
+    * data the entries were aggregated from, so a key the entries never
+    * saw means the upstream changed between the build-time collect and
+    * this pass (a non-deterministic or mutated input). The leaf checks
+    * its key and raises instead of handing back a neighbouring bucket's
+    * value; with no entries at all every probe raises. `default` types
+    * the empty case. */
+  private[ops] def literalLookup(key: Column,
       entries: IndexedSeq[(Int, Column)], default: Column): Column = {
+    val unseen = raise_error(concat(lit("bucket id "), key.cast("string"),
+      lit(" is not among the build-time offsets: the upstream changed " +
+        "between the offsets collect and this pass (is it deterministic?)")))
     def go(lo: Int, hi: Int): Column =
-      if (lo == hi) entries(lo)._2
+      if (lo == hi)
+        when(key === lit(entries(lo)._1), entries(lo)._2).otherwise(unseen)
       else {
         val mid = (lo + hi) / 2
         when(key > lit(entries(mid)._1), go(mid + 1, hi))
           .otherwise(go(lo, mid))
       }
-    if (entries.isEmpty) default else go(0, entries.length - 1)
+    if (entries.isEmpty) when(lit(false), default).otherwise(unseen)
+    else go(0, entries.length - 1)
   }
 
   /** Append running (prefix) sums — and optionally the dense rank — over

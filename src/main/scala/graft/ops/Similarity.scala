@@ -850,8 +850,11 @@ object Similarity {
     * when k is sized to the corpus (k ≈ N / target_cluster_size; the
     * paper runs k = 11k on 5B embeddings). The scoring kernel is the
     * codegen'd [[graft.functions.CosineSim]] single-pass fused
-    * dot+norms; the assignment pass is [[kmeansAssign]]'s broadcast
-    * nested-loop (no shuffle on the corpus side).
+    * dot+norms; the assignment is one codegen'd argmin per vector
+    * ([[graft.functions.NearestCentroidId]]) against the centroid table
+    * broadcast as one row — [[kmeansAssign]]'s metric and tie-break
+    * without its nested loop and regrouping aggregate (no shuffle on the
+    * corpus side either way).
     *
     * Returns one row per vector: (idCol, cid, n_dups, keep) where
     * n_dups = smaller-id in-cluster neighbors at ≥ threshold and
@@ -883,30 +886,46 @@ object Similarity {
       .agg(min(col(idCol)).as("__gid"),
         sort_array(collect_list(col(idCol))).as("__ids"))
     // centroids from the FULL corpus (k lowest ids — the deterministic
-    // init any engine can recompute), assignment over representatives
+    // init any engine can recompute), shipped as ONE row: the whole
+    // centroid table as a cid-sorted list, broadcast, so the assignment
+    // over representatives is one codegen'd argmin per row
+    // ([[graft.functions.NearestCentroidId]], bit-identical to
+    // min(struct(round(Σ(x−y)², 6), cid))), with no aggregate regrouping
+    // the representatives by __gid. The assignment is consumed three
+    // times below (both pair sides and the members); AQE does not reuse
+    // an exchange above a cached input, so each consumer re-derives it,
+    // which is why it must stay this cheap.
     val cents = v.orderBy(col(idCol).asc).limit(k)
-      .select(col(idCol).as("__cid"), col("__v").as("__cvec"))
+      .agg(sort_array(collect_list(
+        struct(col(idCol).as("__cid"), col("__v").as("__cvec")))).as("__cents"))
     val repAssigned = groups
       .crossJoin(broadcast(cents))
-      .withColumn("__d2", round(
-        aggregate(
-          zip_with(col("__v"), col("__cvec"), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, x) => acc + x), 6))
-      .groupBy(col("__gid"))
-      .agg(min(struct(col("__d2"), col("__cid"))).as("__m"),
-        first(col("__v")).as("__v"), first(col("__ids")).as("__ids"))
-      .select(col("__gid"), col("__m.__cid").as("cid"),
+      .select(col("__gid"),
+        graft.functions.NearestCentroidId
+          .nearest_centroid_id(col("__v"), col("__cents")).as("cid"),
         col("__v"), col("__ids"))
     // qualified neighbor GROUPS per group (both directions), carrying
-    // the neighbor's sorted id list
+    // the neighbor's sorted id list. The probe side is spread round-robin
+    // over the session's cores: when the representatives fit a broadcast
+    // (the planner's choice) the cid join runs as a broadcast hash join
+    // over those partitions instead of in at most k tasks (one, once AQE
+    // coalesces the small input); at corpus scale it shuffles on cid
+    // (k ≈ N / cluster size keys) and the round-robin is one extra
+    // exchange of the probe side. The cheap bound cos ≥ t − 1e-6 runs
+    // before the exact round(cos, 6) ≥ t (a BigDecimal per pair):
+    // rounding to 6 decimals moves a value by at most 5e-7, so the bound
+    // drops only pairs the exact test drops too.
     def rside(n: String) = repAssigned.select(col("cid"),
       col("__gid").as(s"gid_$n"), col("__v").as(s"v_$n"),
       col("__ids").as(s"ids_$n"))
-    val nbr = rside("a").join(rside("b"), Seq("cid"))
+    val nbr = rside("a")
+      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
+      .join(rside("b"), Seq("cid"))
       .filter(col("gid_a") =!= col("gid_b"))
-      .withColumn("__cos", round(
-        graft.functions.CosineSim.cosine_sim(col("v_a"), col("v_b")), 6))
-      .filter(col("__cos") >= threshold)
+      .withColumn("__cos",
+        graft.functions.CosineSim.cosine_sim(col("v_a"), col("v_b")))
+      .filter(col("__cos") >= lit(threshold - 1e-6) &&
+        round(col("__cos"), 6) >= threshold)
       .select(col("gid_a").as("__gid"), col("ids_b"))
     // member expansion: in-group term = rank in the sorted id list,
     // cross-group term = smaller ids in each qualified neighbor group.

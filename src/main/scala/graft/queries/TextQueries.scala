@@ -15,8 +15,9 @@ object TextQueries {
   /** Documents with distinct 3-word shingles, fanned out and CACHED.
     *
     * The cache is load-bearing twice over, not an optimization garnish:
-    * (1) both sides of the posting join (and the LSH signature pass) read
-    * it — without the barrier each consumer recomputes the shingling;
+    * (1) the posting lists of every jaccardPairs call (and the LSH
+    * signature pass) read it — without the barrier each consumer
+    * recomputes the shingling;
     * (2) Catalyst's InferFiltersFromGenerate pushes a `size(sh)>0` filter
     * through the repartition to the scan with the WHOLE interpreted
     * higher-order shingle expression inlined (~4× per row, single input
@@ -33,11 +34,11 @@ object TextQueries {
 
 
   /** Lang-blocked exact Jaccard pairs over [[shingledDocs]], CACHED: four
-    * queries consume this posting join (near top-k, minhash + simhash
+    * queries consume this pair list (near top-k, minhash + simhash
     * verdict ground truth, cluster edges) — identical plans share one
-    * CacheManager entry, so the Σ df² join runs once per session instead
-    * of once per query. Same 100 TB shape as the shingle cache: persist
-    * the pair list once, fan consumers out from it. */
+    * CacheManager entry, so the Σ df² pair generation runs once per
+    * session instead of once per query. Same 100 TB shape as the shingle
+    * cache: persist the pair list once, fan consumers out from it. */
   private def jacPairs(s: org.apache.spark.sql.SparkSession, d: String) =
     Dedup.jaccardPairs(shingledDocs(s, d), "doc_id", "sh", Seq("lang"))
       .cache()
@@ -69,13 +70,14 @@ object TextQueries {
   /** E2 exact path: top-25 most-similar document pairs by 3-word-shingle
     * Jaccard, blocked by lang (the blocking key both bounds the O(n²) pair
     * space and mirrors a real dedup pipeline's partitioning), with the
-    * HOT-SHINGLE DF CAP live (maxDf 8): postings whose shingle appears in
-    * more than 8 docs of a block are dropped before the self-join — the
-    * skew guard that keeps Σ df² bounded when one Zipf-head shingle shows
-    * up in millions of docs. The cap binds at sf0.1 (max df 14), and the
-    * oracle replays the SAME capped posting join, so the jac values agree
-    * even where the cap bites. Pairs sharing only capped shingles never
-    * materialize on either side. */
+    * HOT-SHINGLE DF CAP live (maxDf 8): a shingle that appears in more
+    * than 8 docs of a block contributes no pairs (its posting list is
+    * never materialized past 9 entries) — the skew guard that keeps
+    * Σ df² bounded when one Zipf-head shingle shows up in millions of
+    * docs. The cap binds at sf0.1 (max df 14), and the oracle replays
+    * the same cap as a df-filtered posting self-join, so the jac values
+    * agree even where the cap bites. Pairs sharing only capped shingles
+    * never materialize on either side. */
   val dedupNear = QuerySpec(
     "q_dedup_near",
     (s, d) => {
@@ -977,7 +979,7 @@ object TextQueries {
   /** Asymmetric CONTAINMENT (overlap coefficient |A∩B| / min(|A|,|B|)) —
     * the quote/subset detector Jaccard misses: a short doc fully quoted
     * inside a long one scores containment 1.0 but a low Jaccard (union is
-    * dominated by the long doc). Same posting join as q_dedup_near — the
+    * dominated by the long doc). Same posting pairs as q_dedup_near — the
     * sizes ride along with the intersection count, so the second metric
     * is free. Top-25 by containment. */
   val containment = QuerySpec(
@@ -1248,9 +1250,9 @@ object TextQueries {
 
   /** Sorted-neighborhood near-dup candidates (window w=4 over the
     * shingle-bag sort order) — the join-free third blocking scheme next
-    * to the exact posting join and MinHash-LSH; rides the SAME
+    * to the exact posting-list pairs and MinHash-LSH; rides the SAME
     * shingledDocs cache. Top-25 by the shared inclusion–exclusion
-    * Jaccard; finds the corpus's ≈0.99-jac pairs the posting join pins
+    * Jaccard; finds the corpus's ≈0.99-jac pairs the exact pairs pin
     * (near-identical docs sort adjacently by construction). */
   val snmDedup = QuerySpec(
     "q_snm_dedup",

@@ -34,7 +34,7 @@ object SpillGate {
     "q_rolling_median",   // window sort
     "q_latest_per_key",   // partition top-1 window
     "q_groupby_median",   // exact-median sort-aggregate
-    "q_dedup_near",       // posting self-join
+    "q_dedup_near",       // posting-list aggregate + pair count
     "q_topk")             // TakeOrderedAndProject over a sort
 
   def main(args: Array[String]): Unit = {

@@ -44,10 +44,22 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("near-dup posting join is an equi-join — no cross product anywhere") {
+  test("near-dup posting pairs come from keyed posting lists — no cross product anywhere") {
     val p = plan(SparkEntry.queries("q_dedup_near")(spark, Sf001))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
+  test("near-dup pairs read the posting stream once: no self-join, no anti-join, one posting shuffle") {
+    // the pairs come from one posting list per (lang, shingle): the
+    // stream is exploded once and shuffled once on its key, with no
+    // join on the shingle and no hot-shingle anti-join for the df cap
+    val p = plan(SparkEntry.queries("q_dedup_near")(spark, Sf001))
+    assert(!p.contains("LeftAnti"), p)
+    assert(!p.linesIterator.exists(l => l.contains("Join") && l.contains("__sh")), p)
+    val postingShuffles = p.linesIterator.count(l =>
+      l.contains("Exchange hashpartitioning") && l.contains("__sh"))
+    assert(postingShuffles === 1, p)
   }
 
   test("semi and anti joins stay semi/anti at the physical level") {
@@ -506,6 +518,16 @@ class PlanSpec extends SparkSpec {
       l.contains("SortMergeJoin") && l.contains("cid") ||
         l.contains("ShuffledHashJoin") && l.contains("cid") ||
         l.contains("BroadcastHashJoin") && l.contains("cid")), p)
+  }
+
+  test("semdedup assigns clusters with one kernel: no zip_with lambda, no regroup by __gid") {
+    // the assignment is a codegen'd argmin against the broadcast centroid
+    // list, not a cross join scored by interpreted lambdas and regrouped
+    // by an aggregate keyed on the representative
+    val p = plan(SparkEntry.queries("q_semdedup")(spark, Sf001))
+    assert(!p.contains("zip_with"), p)
+    assert(!p.linesIterator.exists(l =>
+      l.matches(".*Aggregate\\(keys=\\[[^\\]]*__gid.*")), p)
   }
 
   test("chunk rewrite has no global window or single-task sort") {

@@ -264,4 +264,116 @@ class CurationSpec extends SparkSpec {
     assert(r.map(t => (t._1, t._3, t._4)) === Seq(
       (1L, 0L, 1), (2L, 0L, 1), (3L, 1L, 0), (4L, 0L, 1)))
   }
+
+  // --- semDedup vs the cross-join assignment it replaced ----------------
+
+  /** The earlier semDedup, kept as the oracle: the assignment is a
+    * broadcast cross join of the representatives with the k centroid rows,
+    * the SQL rounded distance, and min(struct(d2, cid)) regrouped by
+    * __gid; the pair stage tests round(cos, 6) ≥ t directly. */
+  private def crossJoinSemDedup(emb: org.apache.spark.sql.DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      threshold: Double): org.apache.spark.sql.DataFrame = {
+    val v = emb.select(col(idCol),
+      Similarity.requireVec(Similarity.asDouble(col(vecCol))).as("__v"))
+    val groups = v.groupBy("__v")
+      .agg(min(col(idCol)).as("__gid"),
+        sort_array(collect_list(col(idCol))).as("__ids"))
+    val cents = v.orderBy(col(idCol).asc).limit(k)
+      .select(col(idCol).as("__cid"), col("__v").as("__cvec"))
+    val repAssigned = groups
+      .crossJoin(broadcast(cents))
+      .withColumn("__d2", round(
+        aggregate(
+          zip_with(col("__v"), col("__cvec"), (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, x) => acc + x), 6))
+      .groupBy(col("__gid"))
+      .agg(min(struct(col("__d2"), col("__cid"))).as("__m"),
+        first(col("__v")).as("__v"), first(col("__ids")).as("__ids"))
+      .select(col("__gid"), col("__m.__cid").as("cid"),
+        col("__v"), col("__ids"))
+    def rside(n: String) = repAssigned.select(col("cid"),
+      col("__gid").as(s"gid_$n"), col("__v").as(s"v_$n"),
+      col("__ids").as(s"ids_$n"))
+    val nbr = rside("a").join(rside("b"), Seq("cid"))
+      .filter(col("gid_a") =!= col("gid_b"))
+      .withColumn("__cos", round(
+        graft.functions.CosineSim.cosine_sim(col("v_a"), col("v_b")), 6))
+      .filter(col("__cos") >= threshold)
+      .select(col("gid_a").as("__gid"), col("ids_b"))
+    val members = repAssigned.select(col("cid"), col("__gid"),
+      (aggregate(col("__v"), lit(0.0), (acc, x) => acc + x * x) > 0)
+        .as("__selfok"),
+      posexplode(col("__ids")).as(Seq("__rank", "__id")))
+    members.join(nbr, Seq("__gid"), "left")
+      .withColumn("__c",
+        when(col("ids_b").isNull, lit(0))
+          .otherwise(size(filter(col("ids_b"), x => x < col("__id")))))
+      .withColumn("__r",
+        when(col("__selfok"), col("__rank")).otherwise(lit(0)))
+      .groupBy(col("__id").as(idCol), col("cid"), col("__r"))
+      .agg(sum(col("__c")).as("__cross"))
+      .select(col(idCol), col("cid"),
+        (col("__r").cast("long") + col("__cross")).as("n_dups"),
+        ((col("__r") + col("__cross")) === 0).cast("int").as("keep"))
+  }
+
+  private def assertSemDedupMatches(emb: org.apache.spark.sql.DataFrame,
+      k: Int, threshold: Double, clue: String): Unit = {
+    val got = Similarity.semDedup(emb, "vec_id", "embedding", k, threshold)
+    val want = crossJoinSemDedup(emb, "vec_id", "embedding", k, threshold)
+    assert(got.schema === want.schema, clue)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vec_id").collect().toSeq.map(_.toSeq)
+    assert(rows(got) === rows(want), clue)
+  }
+
+  test("semDedup equals the cross-join assignment: rounded-distance ties go to the lowest cid") {
+    // centroids are ids 0..2. Every other vector sits where two
+    // centroids' distances differ by < 5e-7 and round equal — in both
+    // raw orders — so only the lowest-cid tie-break separates them.
+    val emb = Seq(
+      (0L, Seq(1.0000001, 0.0)), (1L, Seq(0.0, 1.0)), (2L, Seq(1.0, 0.0)),
+      (3L, Seq(0.0, 0.0)), (4L, Seq(0.5, 0.5)), (5L, Seq(0.5000001, 0.5)),
+      (6L, Seq(-1.0, -1.0)), (7L, Seq(0.0, 0.0)), (8L, Seq(2.0, 2.0)))
+      .toDF("vec_id", "embedding")
+    for (t <- Seq(0.42, 0.9, 1.0)) assertSemDedupMatches(emb, 3, t, s"t=$t")
+    assert(Similarity.semDedup(emb, "vec_id", "embedding", 3, 0.9)
+      .filter(col("vec_id") === 3).select("cid").as[Long].head() === 0L)
+  }
+
+  test("semDedup equals the cross-join assignment: NaN components, zero vectors, duplicate groups, k >= n") {
+    val rnd = new scala.util.Random(29)
+    val palette = Seq(0.0, 1.0, -1.0, 0.5, 1.0000001)
+    val base = (0L until 120L).map { i =>
+      val vec = rnd.nextInt(12) match {
+        case 0 => Seq(Double.NaN, 1.0, 0.0)
+        case 1 => Seq(0.0, 0.0, 0.0)
+        case 2 => Seq(1.0, 1.0, 1.0) // a large exact-duplicate group
+        case _ => Seq.fill(3)(palette(rnd.nextInt(palette.length)))
+      }
+      (i, vec.map(_.toFloat))
+    }
+    val emb = rnd.shuffle(base).toDF("vec_id", "embedding").repartition(4)
+    for ((k, t) <- Seq((1, 0.42), (4, 0.9), (8, 0.5), (120, 0.7), (500, 0.99)))
+      assertSemDedupMatches(emb, k, t, s"k=$k t=$t")
+    val tiny = Seq((5L, Seq(1f, 0f)), (2L, Seq(1f, 0f)), (9L, Seq(0f, 0f)))
+      .toDF("vec_id", "embedding")
+    for (k <- Seq(3, 10)) assertSemDedupMatches(tiny, k, 0.5, s"tiny k=$k")
+  }
+
+  test("semDedup rejects a NULL embedding and a vector of the wrong length") {
+    def messages(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    val withNull = Seq((0L, Some(Seq(1f, 0f))), (1L, None), (2L, Some(Seq(0f, 1f))))
+      .toDF("vec_id", "embedding")
+    val e1 = intercept[Exception](
+      Similarity.semDedup(withNull, "vec_id", "embedding", 1, 0.5).collect())
+    assert(messages(e1).contains("corpus contains NULL embeddings"), messages(e1))
+    val ragged = Seq((0L, Seq(1f, 0f)), (1L, Seq(1f, 0f, 0f)), (2L, Seq(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val e2 = intercept[Exception](
+      Similarity.semDedup(ragged, "vec_id", "embedding", 1, 0.5).collect())
+    assert(messages(e2).contains("length"), messages(e2))
+  }
 }

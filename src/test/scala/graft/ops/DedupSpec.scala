@@ -320,4 +320,104 @@ class DedupSpec extends SparkSpec {
       .orderBy("id_a", "id_b").collect().toSeq
     assert(a === b)
   }
+
+  // --- jaccardPairs vs the posting self-join it replaced ----------------
+
+  /** The earlier jaccardPairs, kept as the oracle: an equi-self-join of
+    * the exploded postings on (block, shingle), the df cap applied by
+    * broadcast anti-join against the over-cap keys. */
+  private def selfJoinPairs(docs: org.apache.spark.sql.DataFrame, id: String,
+      shingleCol: String, blockCols: Seq[String],
+      maxDf: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+    val allPosts = docs
+      .select((blockCols.map(col) :+ col(id) :+
+        size(col(shingleCol)).as("__sz") :+
+        explode(col(shingleCol)).as("__sh")): _*)
+    val posts = maxDf match {
+      case None => allPosts
+      case Some(cap) =>
+        val hot = allPosts
+          .groupBy((blockCols :+ "__sh").map(col): _*)
+          .agg(count(lit(1)).as("__df"))
+          .filter(col("__df") > cap)
+          .drop("__df")
+        allPosts.join(broadcast(hot), blockCols :+ "__sh", "left_anti")
+    }
+    def sided(side: String) =
+      posts.toDF(posts.columns.map {
+        case `id` => s"id_$side"
+        case "__sz" => s"sz_$side"
+        case c => c
+      }: _*)
+    sided("a").join(sided("b"), blockCols :+ "__sh")
+      .filter(col("id_a") < col("id_b"))
+      .groupBy((blockCols :+ "id_a" :+ "id_b" :+ "sz_a" :+ "sz_b").map(col): _*)
+      .agg(count(lit(1)).as("common"))
+      .withColumn("jac",
+        col("common").cast("double") /
+          (col("sz_a") + col("sz_b") - col("common")).cast("double"))
+  }
+
+  /** Row-for-row (multiset) and schema equality of the grouped form with
+    * the self-join oracle, uncapped and at each cap. */
+  private def assertMatchesSelfJoin(docs: org.apache.spark.sql.DataFrame,
+      blockCols: Seq[String], caps: Seq[Int], clue: String): Unit =
+    for (cap <- None +: caps.map(Some(_))) {
+      val got = Dedup.jaccardPairs(docs, "doc_id", "sh", blockCols, cap)
+      val want = selfJoinPairs(docs, "doc_id", "sh", blockCols, cap)
+      assert(got.schema === want.schema, s"$clue cap=$cap")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("|"))
+          .groupBy(identity).view.mapValues(_.size).toMap
+      val (g, w) = (rows(got), rows(want))
+      assert(g === w, s"$clue cap=$cap")
+    }
+
+  test("jaccardPairs equals the posting self-join on NULLs, duplicate ids, df at the cap and single-doc blocks") {
+    val docs = Seq[(Option[Long], Option[String], Option[Seq[String]])](
+      (Some(1L), Some("en"), Some(Seq("a", "b", "c", "hot"))),
+      (Some(2L), Some("en"), Some(Seq("a", "b", "hot"))),
+      (Some(3L), Some("en"), Some(Seq("b", "c", "hot", null))),
+      (Some(4L), Some("en"), Some(Seq("c", "d", null))),
+      (Some(2L), Some("en"), Some(Seq("a", "d", "hot"))),        // duplicate id
+      (None, Some("en"), Some(Seq("a", "b", "hot"))),            // NULL id
+      (Some(5L), None, Some(Seq("a", "b", "c"))),                // NULL block
+      (Some(6L), None, Some(Seq("a", "b"))),
+      (Some(7L), Some("de"), Some(Seq("a", "b", "c"))),          // single-doc block
+      (Some(8L), Some("fr"), None),                              // NULL set
+      (Some(9L), Some("fr"), Some(Seq.empty[String])),
+      (Some(10L), Some("en"), Some(Seq("d", "hot"))))
+      .toDF("doc_id", "lang", "sh")
+    // "hot" in en has df 6 (ids 1, 2, 3, 2, NULL, 10): caps 5 and 6
+    // put it at cap + 1 and at the cap; "a"/"b" sit at df 4 and 5
+    assertMatchesSelfJoin(docs, Seq("lang"), Seq(1, 2, 3, 4, 5, 6, 7), "edges")
+    assertMatchesSelfJoin(docs.withColumn("all", lit(1)), Seq("all"),
+      Seq(3, 6, 9), "one block")
+    // two block columns, one of them NULL on some rows
+    assertMatchesSelfJoin(docs.withColumn("src",
+        when(col("doc_id") % 3 === 0, lit(null).cast("string")).otherwise(lit("w"))),
+      Seq("lang", "src"), Seq(2, 4), "two blocks")
+  }
+
+  test("jaccardPairs equals the posting self-join on seeded random corpora") {
+    for ((seed, n, vocab) <- Seq((1, 60, 12), (2, 150, 30), (3, 40, 5), (4, 200, 80))) {
+      val rnd = new scala.util.Random(seed)
+      val docs = (1 to n).map { i =>
+        val tail = (0 until rnd.nextInt(6)).map { _ =>
+          if (rnd.nextInt(30) == 0) null else s"w${rnd.nextInt(vocab)}"
+        }
+        val sh = (if (rnd.nextInt(3) > 0) "the" +: tail else tail).distinct
+        // a few duplicate ids and NULL ids / blocks
+        val id = if (rnd.nextInt(25) == 0) None
+          else Some((if (rnd.nextInt(10) == 0) rnd.nextInt(i) + 1 else i).toLong)
+        val lang = rnd.nextInt(20) match {
+          case 0 => None
+          case 1 => Some("solo" + i) // single-document block
+          case x => Some(if (x % 2 == 0) "a" else "b")
+        }
+        (id, lang, sh)
+      }.toDF("doc_id", "lang", "sh").repartition(3)
+      assertMatchesSelfJoin(docs, Seq("lang"), Seq(1, 3, 8, 20), s"seed=$seed")
+    }
+  }
 }

@@ -115,4 +115,21 @@ class RanksSpec extends SparkSpec {
       .select("tok").as[String].collect().toSeq
     assert(byKey === byPair)
   }
+
+  test("literalLookup raises on a bucket id it never saw instead of a neighbour's offset") {
+    val entries = IndexedSeq(0 -> lit(0L), 2 -> lit(10L), 5 -> lit(25L), 6 -> lit(40L))
+    def lookup(ids: Seq[Int], es: IndexedSeq[(Int, org.apache.spark.sql.Column)]) =
+      ids.toDF("b").repartition(2)
+        .select(col("b"), Ranks.literalLookup(col("b"), es, lit(0L)).as("o"))
+        .as[(Int, Long)].collect().toMap
+    assert(lookup(Seq(0, 2, 5, 6), entries) ===
+      Map(0 -> 0L, 2 -> 10L, 5 -> 25L, 6 -> 40L))
+    // every gap, both ends, and an empty entry list: each probe raises
+    for ((ids, es) <- Seq(Seq(-1), Seq(1), Seq(3), Seq(4), Seq(7), Seq(2, 3))
+        .map(_ -> entries) :+ (Seq(0) -> IndexedSeq.empty)) {
+      val e = intercept[Exception](lookup(ids, es))
+      assert(String.valueOf(e.getMessage).contains("is not among the build-time offsets"),
+        s"${ids.mkString(",")}: ${e.getMessage}")
+    }
+  }
 }
