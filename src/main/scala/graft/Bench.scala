@@ -1,28 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Replay-harness trigger count for the q_stream_* gates: the bench
-      // runs the MINIMUM that still chains state across a batch boundary
-      // — 2 data slices + 2 sentinel closes = 4 triggers vs the
-      // correctness gate's 8 data slices. The oracles are slice-count-
-      // invariant, and ReplayFloor measured the harness floor at
-      // 0.41–0.45 s/trigger (0.74 s on RocksDB: state-commit IO is the
-      // difference) with a ~1–2 s start/stop intercept, so each fewer
-      // data slice saves ~0.5 s per replay gate across the eleven
-      // streaming queries (VERDICT r9 item 8; Replay.run has the full
-      // harness argument).
-      .config("graft.replay.slices", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Replay-harness trigger count for the q_stream_* gates: the bench
+    // runs the MINIMUM that still chains state across a batch boundary
+    // — 2 data slices + 2 sentinel closes = 4 triggers vs the
+    // correctness gate's 8 data slices. The oracles are slice-count-
+    // invariant, and the harness floor was measured at 0.41–0.45
+    // s/trigger (0.74 s on RocksDB: state-commit IO is the difference)
+    // with a ~1–2 s start/stop intercept, so each fewer data slice saves
+    // ~0.5 s per replay gate across the eleven streaming queries
+    // (Replay.run has the full harness argument; `perfbench --profile`
+    // reports each replay's micro-batches).
+    val spark = Sessions.start(
+      Sessions.builder().config("graft.replay.slices", "2"))
     // Untimed warmup ON THE BENCHMARKED DATASET. Two parts:
     // (1) Pin every base table in memory (cache + count): the CacheManager
     //     then swaps each query's scan of the same path to the in-memory

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Dense global ranks WITHOUT a global sort — the scale-form primitive
   * behind every "position in total order" operator (z-order tiling,
@@ -123,10 +124,11 @@ object Ranks {
     * binary-search CASE trees — the [[globalRank]] offsets-as-literals
     * shape, no join anywhere in the plan.
     *
-    * Value columns must be EXACT types (long/decimal): their sums
-    * re-associate losslessly, so the distributed form is bit-identical
-    * to the single-partition window. Do NOT pass float/double values —
-    * partial-sum re-association would change ulps (rejected at build).
+    * Value columns must be LONG (counts and integer sums — every caller
+    * passes those; checked before any job runs): their sums re-associate
+    * losslessly, so the distributed form is bit-identical to the
+    * single-partition window, where float/double partial sums would
+    * change ulps.
     * Value columns must also be NON-NULL except where NULLs sort to the
     * global head (a NULL sort key lands in bucket 0): a NULL value
     * mid-order would make literal-offset + NULL-local-prefix diverge
@@ -143,52 +145,43 @@ object Ranks {
     require(nParts > 0, s"nParts=$nParts must be positive")
     require(cums.nonEmpty || rankCol.nonEmpty,
       "globalCumsum needs at least one cumulative column or a rank column")
+    cums.foreach { case (_, v) =>
+      val t = df.select(col(v)).schema.head.dataType
+      require(t == LongType,
+        s"globalCumsum value column $v must be LONG, got ${t.simpleString}")
+    }
     val bounds = sampleCutpoints(df, sortCols.head, nParts)
     val keyed = df.withColumn("__gr_bkt", bucketOf(sortCols.head, bounds))
     // per-bucket counts AND value totals in ONE collected aggregate
-    // (≤ nParts rows, one bounded job), prefix-summed on the driver and
+    // (≤ nParts rows, one bounded job; columns bucket, count, then one
+    // sum per value column), prefix-summed on the driver and
     // embedded as literal binary-search CASE trees — the globalRank
     // offsets-as-literals shape, so the plan carries no join at all
     val aggs = count(lit(1)).as("__gr_cnt") +: cums.zipWithIndex.map {
       case ((_, v), i) => sum(col(v)).as(s"__gr_s$i") }
     val rows = keyed.groupBy("__gr_bkt").agg(aggs.head, aggs.tail: _*)
-      .collect().sortBy(_.getInt(0))
+      .collect().sortBy(_.getInt(0)).toIndexedSeq
     // driver-side prefix sums; a bucket whose value-sum is NULL (all its
     // values NULL) contributes nothing, exactly as window `sum` skips
-    // NULLs. Exact types only: Long and BigDecimal accumulate losslessly.
+    // NULLs, and an overflow raises as the ANSI window sum would
     def prefixOf(idx: Int): IndexedSeq[(Int, Column)] = {
-      var accL = 0L
-      var accD: java.math.BigDecimal = java.math.BigDecimal.ZERO
-      rows.toIndexedSeq.map { r =>
-        val off: Column = r.get(idx) match {
-          case null => if (accD.signum != 0) lit(accD) else lit(accL)
-          case _: java.lang.Long =>
-            val o = lit(accL); accL += r.getLong(idx); o
-          case d: java.math.BigDecimal =>
-            val o = lit(accD); accD = accD.add(d); o
-          case other => throw new IllegalArgumentException(
-            s"globalCumsum needs exact-typed (long/decimal) value " +
-              s"columns, got ${other.getClass.getName}")
-        }
-        (r.getInt(0), off)
-      }
+      val offs = rows.scanLeft(0L) { (acc, r) =>
+        if (r.isNullAt(idx)) acc else Math.addExact(acc, r.getLong(idx)) }
+      rows.indices.map(i => (rows(i).getInt(0), lit(offs(i))))
     }
-    val cntIdx = rows.headOption.map(_.fieldIndex("__gr_cnt")).getOrElse(1)
     val local = Window.partitionBy("__gr_bkt").orderBy(sortCols: _*)
     val localPre = local.rowsBetween(Window.unboundedPreceding, 0)
     val withRank = rankCol match {
       case Some(rc) =>
         keyed.withColumn(rc,
-          literalLookup(col("__gr_bkt"), prefixOf(cntIdx), lit(0L)) +
+          literalLookup(col("__gr_bkt"), prefixOf(1), lit(0L)) +
             row_number().over(local))
       case None => keyed
     }
     val withCums = cums.zipWithIndex.foldLeft(withRank) {
       case (acc, ((out, v), i)) =>
-        val idx = rows.headOption
-          .map(_.fieldIndex(s"__gr_s$i")).getOrElse(i + 2)
         acc.withColumn(out,
-          literalLookup(col("__gr_bkt"), prefixOf(idx), lit(0L)) +
+          literalLookup(col("__gr_bkt"), prefixOf(i + 2), lit(0L)) +
             sum(col(v)).over(localPre))
     }
     withCums.drop("__gr_bkt")

@@ -96,15 +96,13 @@ object Replay {
     * not many rows per batch — the correctness gate replays the default.
     * The bench cuts it via the session conf graft.replay.slices —
     * Bench.scala is the single source of truth for the bench value
-    * (currently 2, the ReplayFloor-measured minimum that still crosses a
-    * batch boundary): per-trigger planning + state-store IO is the replay
-    * harness's floor, ~0.4–0.7 s/trigger, and fewer triggers exercise the
-    * same transitions while the oracles are slice-count-invariant
+    * (currently 2, the minimum that still crosses a batch boundary):
+    * per-trigger planning + state-store IO is the replay harness's
+    * floor, ~0.4–0.7 s/trigger, and fewer triggers exercise the same
+    * transitions while the oracles are slice-count-invariant
     * (time-ordered slicing drops nothing at any count). */
   private def sliceDial(spark: SparkSession, default: Int): Int = {
-    val n = spark.conf.getOption("graft.replay.slices")
-      .orElse(sys.env.get("SPARK_GRAFT_REPLAY_SLICES"))
-      .map(_.toInt)
+    val n = spark.conf.getOption("graft.replay.slices").map(_.toInt)
       .getOrElse(default)
     // fail LOUDLY on a nonsense dial: slices < 1 would make fileTumbling
     // bucket every row into __slice = -1 (a directory the flattening
@@ -127,10 +125,10 @@ object Replay {
     *  - no-data micro-batches OFF (r12): with them on, every
     *    `processAllAvailable` barrier runs the data batch AND a trailing
     *    empty batch to flush watermark-closed windows — doubling the
-    *    per-trigger floor the ReplayFloor methodology measures. The
-    *    replay design has never depended on that flush: the SECOND
-    *    far-future sentinel exists precisely to be "the data batch that
-    *    finalizes emission even if the engine's no-data-batch flush does
+    *    per-trigger floor. The replay design has never depended on that
+    *    flush: the SECOND far-future sentinel exists precisely to be
+    *    "the data batch that finalizes emission even if the engine's
+    *    no-data-batch flush does
     *    not fire" (see the object scaladoc), so every runner's result is
     *    identical with the flag off — the oracles hash-gate exactly that.
     *    Scoped to replay streams only; nothing global changes;

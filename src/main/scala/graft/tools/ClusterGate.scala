@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Multi-process execution gate (VERDICT r9 item 1 — the one execution
   * axis `local[n]` cannot see). Every correctness gate so far ran in ONE
@@ -36,7 +37,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Usage:
   *   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 sbt -batch \
   *     "runMain graft.tools.ClusterGate /root/testdata/sf0.001"
-  * Optional 2nd arg: comma-separated query subset override.
+  * Optional 2nd arg: `default`, `all`, or a comma-separated subset.
   * SPARK_HOME must point at a Spark distribution — the in-process
   * workers spawn executor JVMs through its launcher classpath logic —
   * and SPARK_SCALA_VERSION must be set because that logic resolves the
@@ -81,64 +82,18 @@ object ClusterGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // 2nd arg: comma-separated subset, or "all" for the ENTIRE registry
-    // (the exhaustive multi-process sweep; ~3× the default's wall time).
+    // 2nd arg: `default`, `all` for the ENTIRE registry (the exhaustive
+    // multi-process sweep; ~3× the default's wall time), or a comma list.
     // 3rd arg "speculation": the cluster pass additionally runs with
     // AGGRESSIVE speculative execution (every stage's slower tasks get
     // speculative duplicates) — at 100 TB speculation is on, and a
     // duplicated task must never double a side effect (file commits ride
     // the task-commit coordinator) or leak nondeterminism into results.
-    val queries: Seq[String] =
-      if (args.length > 1 && args(1) == "all")
-        graft.SparkEntry.queries.keys.toSeq.sorted
-      else if (args.length > 1 && args(1) != "default")
-        args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else DefaultQueries
-    val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val queries = Gates.queryList(args.lift(1), DefaultQueries)
     val speculation = args.length > 2 && args(2) == "speculation"
 
-    val local = runPass("local[8]", cluster = false, sfDir, queries)
-    val clustered = runPass("local-cluster[2,4,2048]", cluster = true,
-      sfDir, queries, speculation = speculation)
-
-    var bad = 0
-    println(f"[cluster-gate] ${"query"}%-28s ${"rows"}%7s  verdict")
-    queries.foreach { q =>
-      (local.get(q), clustered.get(q)) match {
-        case (Some(Right((hl, nl))), Some(Right((hc, nc)))) =>
-          if (hl == hc && nl == nc)
-            println(f"[cluster-gate] $q%-28s $nl%7d  OK")
-          else {
-            println(f"[cluster-gate] $q%-28s $nl%7d  MISMATCH " +
-              s"(local $hl/$nl rows vs cluster $hc/$nc rows)")
-            bad += 1
-          }
-        case (l, c) =>
-          val err = Seq(l, c).flatten.collectFirst {
-            case Left(e) => e }.getOrElse("missing result")
-          println(f"[cluster-gate] $q%-28s ${0}%7d  ERROR $err")
-          bad += 1
-      }
-    }
-    println(s"[cluster-gate] ${queries.size - bad}/${queries.size} " +
-      s"queries identical across process boundaries")
-    if (bad > 0) sys.exit(1)
-  }
-
-  /** Run every query in a fresh session on `master`; return per-query
-    * canonical (hash, rowCount) or the error message. Shared with
-    * [[FaultGate]] (its baseline pass). */
-  private[tools] def runPass(master: String, cluster: Boolean, sfDir: String,
-      queries: Seq[String], speculation: Boolean = false)
-      : Map[String, Either[String, (String, Long)]] = {
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    if (cluster) clusterConfs(b)
+    val local = Gates.runPass(Gates.local, sfDir, queries)
+    val b = clusterConfs(Sessions.builder("local-cluster[2,4,2048]", 8))
     if (speculation)
       // fire speculative duplicates essentially immediately: any task
       // slower than 1.05× the 10th-percentile task re-launches — far
@@ -147,24 +102,15 @@ object ClusterGate {
         .config("spark.speculation.interval", "100ms")
         .config("spark.speculation.multiplier", "1.05")
         .config("spark.speculation.quantile", "0.1")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      if (cluster) {
-        awaitExecutors(spark, 2)
-        println(s"[cluster-gate] $master up: 2+ executor JVMs")
-      }
-      queries.map { q =>
-        q -> (try Right(canon(graft.SparkEntry.queries(q)(spark, sfDir)))
-        catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
-        })
-      }.toMap
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+    val clustered = Gates.runPass(b, sfDir, queries, { spark =>
+      awaitExecutors(spark, 2)
+      println("[cluster-gate] local-cluster up: 2+ executor JVMs")
+    })
+
+    val bad = Gates.compare("cluster-gate", queries, local, clustered)
+    println(s"[cluster-gate] ${queries.size - bad}/${queries.size} " +
+      s"queries identical across process boundaries")
+    if (bad > 0) sys.exit(1)
   }
 
   /** Executor-launch configs for a local-cluster session (shared with
@@ -196,39 +142,5 @@ object ClusterGate {
       Thread.sleep(250)
     require(executors() >= n,
       s"local-cluster registered ${executors()} executors (<$n)")
-  }
-
-  /** Bit-exact canonical form: columns sorted by name, every cell
-    * rendered exactly (raw IEEE bits for floats), rows sorted, md5. */
-  private[tools] def canon(df: DataFrame): (String, Long) = {
-    val cols = df.columns.sorted
-    val rows = df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-      .collect()
-    val lines = rows.map(r =>
-      r.toSeq.map(cell).map(c => s"${c.length}:$c").mkString("")).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    lines.foreach { l =>
-      md.update(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.update(10.toByte)
-    }
-    (md.digest().map("%02x".format(_)).mkString, rows.length.toLong)
-  }
-
-  private def cell(v: Any): String = v match {
-    case null => "∅"
-    case d: java.lang.Double =>
-      "d" + java.lang.Double.doubleToRawLongBits(d)
-    case f: java.lang.Float =>
-      "f" + java.lang.Float.floatToRawIntBits(f)
-    case b: Array[Byte] => "x" + b.map("%02x".format(_)).mkString
-    case s: scala.collection.Seq[_] =>
-      s.map(cell).mkString("[", ",", "]")
-    case m: scala.collection.Map[_, _] =>
-      m.toSeq.map { case (k, x) => cell(k) + "→" + cell(x) }
-        .sorted.mkString("{", ",", "}")
-    case r: Row => r.toSeq.map(cell).mkString("(", ",", ")")
-    case d: java.math.BigDecimal => "D" + d.toPlainString
-    case d: BigDecimal => "D" + d.underlying.toPlainString
-    case x => x.toString
   }
 }

@@ -1,7 +1,8 @@
 package graft.tools
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import graft.Sessions
 
 /** Concurrent-query gate (VERDICT r10 item 2).
   *
@@ -55,36 +56,19 @@ object ConcurrencyGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nThreads = args.lift(1).map(_.toInt).getOrElse(8)
-    val queries = DefaultQueries
-    val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def canonOf(q: String): Either[String, (String, Long)] =
-      try Right(ClusterGate.canon(graft.SparkEntry.queries(q)(spark, sfDir)))
-      catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(160))
-      }
+    val queries = Gates.queryList(None, DefaultQueries)
+    val spark = Sessions.start(
+      Sessions.builder().config("spark.scheduler.mode", "FAIR"))
 
     // pass 1: serial baseline in one order
-    val serial = queries.map(q => q -> canonOf(q)).toMap
+    val serial = queries.map(q => q -> Gates.canonOf(spark, sfDir, q)).toMap
 
     // pass 2: N threads drain one queue, reverse order (so the schedule
     // differs from the baseline's); track true overlap for anti-vacuity
     val work = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     queries.reverse.foreach(work.add)
     val results = new java.util.concurrent.ConcurrentHashMap[
-      String, Either[String, (String, Long)]]()
+      String, Gates.Result]()
     val active = new AtomicInteger(0)
     val maxActive = new AtomicInteger(0)
     val threads = (0 until nThreads).map { i =>
@@ -93,7 +77,7 @@ object ConcurrencyGate {
         while (q != null) {
           val now = active.incrementAndGet()
           maxActive.accumulateAndGet(now, math.max)
-          try results.put(q, canonOf(q))
+          try results.put(q, Gates.canonOf(spark, sfDir, q))
           finally active.decrementAndGet()
           q = work.poll()
         }
@@ -101,26 +85,10 @@ object ConcurrencyGate {
       t.start(); t
     }
     threads.foreach(_.join())
+    Sessions.stop(spark)
 
-    var bad = 0
-    println(f"[concurrency] ${"query"}%-24s ${"rows"}%7s  verdict")
-    queries.foreach { q =>
-      (serial(q), Option(results.get(q))) match {
-        case (Right((hs, ns)), Some(Right((hc, nc)))) =>
-          if (hs == hc && ns == nc)
-            println(f"[concurrency] $q%-24s $ns%7d  OK")
-          else {
-            println(f"[concurrency] $q%-24s $ns%7d  MISMATCH " +
-              s"(serial $hs/$ns vs concurrent $hc/$nc)")
-            bad += 1
-          }
-        case (s, c) =>
-          val err = (Seq(s) ++ c.toSeq).collectFirst {
-            case Left(e) => e }.getOrElse("missing result")
-          println(f"[concurrency] $q%-24s ${0}%7d  ERROR $err")
-          bad += 1
-      }
-    }
+    var bad = Gates.compare("concurrency", queries, serial,
+      results.asScala.toMap)
     println(s"[concurrency] max in-flight: ${maxActive.get} " +
       s"(threads=$nThreads)")
     if (maxActive.get < 4) {
@@ -129,7 +97,6 @@ object ConcurrencyGate {
     }
     println(s"[concurrency] ${queries.size - bad}/${queries.size} " +
       "queries identical serial vs concurrent")
-    spark.stop()
     if (bad > 0) sys.exit(1)
   }
 }

@@ -1,31 +1,60 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import graft.{SparkEntry, Sessions}
 
-/** Dev tool: time a named query and dump its formatted physical plan.
-  * Usage: runMain graft.tools.Explain <sfDir> <queryName> [explain]
+/** Dev tool: the formatted physical plan (`explain("formatted")`) of each
+  * listed query, to stdout or to `<outDir>/<query>_<suffix>.txt` — the
+  * plan evidence of an optimization (`plans/r11/<query>_{before,after}.txt`).
+  * One JVM for the whole list. Per-query build / plan / execute times and
+  * replay micro-batches come from `perfbench/run.py --profile q_a,q_b`.
+  *
+  * The streaming replays are skipped for the same reason PlanSweep skips
+  * them: building one EXECUTES its stream and the returned frame is the
+  * memory sink's LocalTableScan — no batch plan to dump. Queries whose
+  * build phase runs side-effect actions (the ANN persistence gates) still
+  * dump fine; they are just slower to build.
+  *
+  * Usage: runMain graft.tools.Explain <sfDir> [all|q1,q2,…] [outDir suffix]
+  *   With no query list, dumps every non-streaming registered query.
+  *   Exits nonzero if any plan failed to build.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    require(args.length == 1 || args.length == 2 || args.length == 4,
+      "usage: runMain graft.tools.Explain <sfDir> [all|q1,q2,…] " +
+        "[outDir suffix]")
     val sfDir = args(0)
-    val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    if (args.length > 2 && args(2) == "explain") df.explain("formatted")
-    val t0 = System.nanoTime()
-    val n = df.count()
-    println(f"[explain] $name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s (run 1)")
-    val t1 = System.nanoTime()
-    df.count()
-    println(f"[explain] $name: second run ${(System.nanoTime() - t1) / 1e9}%.2f s")
+    val names = Gates.queryList(args.lift(1),
+      SparkEntry.queries.keys.toSeq.sorted)
+    val out = args.lift(2).map(Paths.get(_))
+    val spark = Sessions.start()
+    out.foreach(Files.createDirectories(_))
+    var failed = 0
+    for (name <- names) {
+      if (name.startsWith("q_stream_")) {
+        System.err.println(s"[explain] skip (streaming replay): $name")
+      } else {
+        try {
+          val txt = SparkEntry.queries(name)(spark, sfDir)
+            .queryExecution.explainString(FormattedMode)
+          out match {
+            case None => println(s"== $name ==\n$txt")
+            case Some(dir) =>
+              val f = dir.resolve(s"${name}_${args(3)}.txt")
+              Files.write(f, txt.getBytes(StandardCharsets.UTF_8))
+              System.err.println(s"[explain] wrote $f")
+          }
+        } catch {
+          case e: Throwable =>
+            failed += 1
+            System.err.println(s"[explain] FAIL $name: ${e.getMessage}")
+        }
+      }
+    }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.OptionConverters._
+import graft.Sessions
 
 /** Executor-loss fault-tolerance gate — the step after [[ClusterGate]]'s
   * multi-process proof: at 100 TB executors die (preemption, OOM killers,
@@ -55,31 +56,20 @@ object FaultGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val queries: Seq[String] =
-      if (args.length > 1)
-        args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else Queries
+    val queries = Gates.queryList(args.lift(1), Queries)
 
-    val baseline = ClusterGate.runPass("local[8]", cluster = false,
-      sfDir, queries)
+    val baseline = Gates.runPass(Gates.local, sfDir, queries)
 
-    val b = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // chaos-tolerant retry budget: under a sustained kill loop a task
-      // can land on a dying executor several times in a row, and the
-      // default 4-failure budget aborts the job (observed: a loaded
-      // machine slows executor relaunch until kills outpace it — every
-      // failure was a LOUD abort, never a wrong answer). A cluster
-      // operated under real chaos tunes exactly these.
-      .config("spark.task.maxFailures", "16")
-      .config("spark.stage.maxConsecutiveAttempts", "8")
-    ClusterGate.clusterConfs(b)
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(ClusterGate.clusterConfs(
+      Sessions.builder("local-cluster[2,4,2048]", 8)
+        // chaos-tolerant retry budget: under a sustained kill loop a task
+        // can land on a dying executor several times in a row, and the
+        // default 4-failure budget aborts the job (observed: a loaded
+        // machine slows executor relaunch until kills outpace it — every
+        // failure was a LOUD abort, never a wrong answer). A cluster
+        // operated under real chaos tunes exactly these.
+        .config("spark.task.maxFailures", "16")
+        .config("spark.stage.maxConsecutiveAttempts", "8")))
     val removed = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onExecutorRemoved(
@@ -131,22 +121,13 @@ object FaultGate {
       val (streamSrc, streamSink, streamChk, streamSchema, batchTwin) =
         prepareStreamFixture(spark, sfDir)
       queries.foreach { q =>
-        val expect = baseline(q)
         (1 to RunsPerQuery).foreach { i =>
           healed()
           val killer = killOnceAfter(500L * i) // vary the strike point
-          val got =
-            try Right(ClusterGate.canon(
-              graft.SparkEntry.queries(q)(spark, sfDir)))
-            catch { case e: Throwable =>
-              Left(s"${e.getClass.getSimpleName}: " +
-                String.valueOf(e.getMessage).take(160))
-            }
+          val got = Gates.canonOf(spark, sfDir, q)
           killer.join(10000)
-          val ok = got == expect
-          if (!ok) bad += 1
-          println(s"[fault-gate] $q run $i/$RunsPerQuery " +
-            (if (ok) "OK" else s"DIVERGED ($got vs $expect)"))
+          bad += Gates.compare(s"fault-gate run $i/$RunsPerQuery", Seq(q),
+            baseline, Map(q -> got))
         }
       }
       // ---- streaming under fire: executor loss MID-STREAM ----
@@ -157,35 +138,25 @@ object FaultGate {
       // checkpoint's delta files — the recovery path a driver-side
       // stop/restart (StreamingSpec) never exercises.
       healed()
-      val streamed =
-        try {
-          val q = graft.streaming.Streams.tumblingByType(
-              spark.readStream.schema(streamSchema)
-                .option("maxFilesPerTrigger", 1).parquet(streamSrc))
-            .writeStream.format("parquet")
-            .option("path", streamSink)
-            .option("checkpointLocation", streamChk)
-            .outputMode("append").start()
-          val k1 = killOnceAfter(1500)
-          val k2 = killOnceAfter(5000)
-          try q.processAllAvailable() finally q.stop()
-          k1.join(10000); k2.join(10000)
-          Right(ClusterGate.canon(spark.read.parquet(streamSink)
-            .filter(org.apache.spark.sql.functions
-              .col("event_type") =!= "__wm")))
-        } catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(160))
-        }
-      val streamOk = streamed == Right(batchTwin)
-      if (!streamOk) bad += 1
-      println(s"[fault-gate] stream_tumbling under fire " +
-        (if (streamOk) "OK" else s"DIVERGED ($streamed vs $batchTwin)"))
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+      val streamed = Gates.attempt {
+        val q = graft.streaming.Streams.tumblingByType(
+            spark.readStream.schema(streamSchema)
+              .option("maxFilesPerTrigger", 1).parquet(streamSrc))
+          .writeStream.format("parquet")
+          .option("path", streamSink)
+          .option("checkpointLocation", streamChk)
+          .outputMode("append").start()
+        val k1 = killOnceAfter(1500)
+        val k2 = killOnceAfter(5000)
+        try q.processAllAvailable() finally q.stop()
+        k1.join(10000); k2.join(10000)
+        Gates.canon(spark.read.parquet(streamSink)
+          .filter(org.apache.spark.sql.functions.col("event_type") =!= "__wm"))
+      }
+      val stream = "stream_tumbling_under_fire"
+      bad += Gates.compare("fault-gate", Seq(stream),
+        Map(stream -> Right(batchTwin)), Map(stream -> streamed))
+    } finally Sessions.stop(spark)
     val totalRuns = queries.size * RunsPerQuery + 1 // + the stream run
     println(s"[fault-gate] ${totalRuns - bad}/$totalRuns runs identical " +
       s"to baseline under ${kills.get()} executor kills " +
@@ -240,7 +211,7 @@ object FaultGate {
       }
       require(moved, s"no parquet part written for slice $i")
     }
-    val twin = ClusterGate.canon(
+    val twin = Gates.canon(
       graft.streaming.Streams.tumblingByType(capped))
     (src.toString, root.resolve("out").toString,
       root.resolve("chk").toString, schema, twin)

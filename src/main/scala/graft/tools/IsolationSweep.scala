@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Session-order-independence sweep — the gate the q_adamic_adar
   * landmine motivated: that query PASSED every full sweep for ten rounds
@@ -30,43 +30,21 @@ import org.apache.spark.sql.SparkSession
 object IsolationSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def canonOf(q: String): Either[String, (String, Long)] =
-      try Right(ClusterGate.canon(graft.SparkEntry.queries(q)(spark, sfDir)))
-      catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(160))
-      }
-
+    val spark = Sessions.start(Gates.local)
     // true registry order (the ordered spec Seq, not the unordered Map —
     // Map iteration is hash order, which only happens to match Verify)
     val warmOrder = graft.SparkEntry.specs.map(_.name)
-    val warm = warmOrder.map(q => q -> canonOf(q)).toMap
-    val cold = warmOrder.sorted.map { q =>
+    val warm = warmOrder.map(q => q -> Gates.canonOf(spark, sfDir, q)).toMap
+    val coldOrder = warmOrder.sorted
+    val cold = coldOrder.map { q =>
       spark.catalog.clearCache()
-      q -> canonOf(q)
+      q -> Gates.canonOf(spark, sfDir, q)
     }.toMap
+    Sessions.stop(spark)
 
-    var bad = 0
-    warmOrder.sorted.foreach { q =>
-      (warm(q), cold(q)) match {
-        case (Right(a), Right(b)) if a == b => ()
-        case (w, c) =>
-          println(s"[isolation] $q ORDER-DEPENDENT: warm=$w cold=$c")
-          bad += 1
-      }
-    }
+    val bad = Gates.compare("isolation", coldOrder, warm, cold)
     println(s"[isolation] ${warmOrder.size - bad}/${warmOrder.size} " +
       "queries identical warm-sweep vs cold-per-query")
-    spark.stop()
     if (bad > 0) sys.exit(1)
   }
 }

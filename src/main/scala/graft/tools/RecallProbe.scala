@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -13,14 +13,7 @@ import graft.ops.Similarity
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start()
     val emb = graft.Tables.embeddings(spark, sfDir)
     val probeIds = (0L until 8L)
     def exactCosTop(probe: Seq[Double], ex: Long): Set[Long] =

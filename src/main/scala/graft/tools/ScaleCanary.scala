@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -85,15 +86,7 @@ object ScaleCanary {
     require(factor >= 2 && factor <= maxFactor,
       s"factor $factor out of range [2, $maxFactor]" +
         (if (grow("embeddings")) " (embedding rotations collide)" else ""))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start()
     build(spark, baseDir, outDir, factor, grow)
     val passes = sys.env.getOrElse("SPARK_GRAFT_CANARY_PASSES", "2").toInt
     val warmTables = grow.toSeq.sorted

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -137,15 +138,7 @@ object SkewCanary {
   def main(args: Array[String]): Unit = {
     val baseDir = args(0)
     val outDir = args.lift(1).getOrElse("/tmp/graft_skew_canary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start()
     build(spark, baseDir, outDir)
     val passes = sys.env.getOrElse("SPARK_GRAFT_CANARY_PASSES", "2").toInt
     val warm = Seq("documents", "events", "lineitem", "embeddings")

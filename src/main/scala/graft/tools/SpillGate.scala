@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -23,8 +22,9 @@ import java.util.concurrent.atomic.AtomicLong
   * The query set is the shuffle/sort/window/join/aggregation-heavy
   * family; results must be bit-identical to the unforced baseline.
   *
-  * Usage: runMain graft.tools.SpillGate [sfDir] (default sf0.1 — spill
-  * volume needs real rows). Exits nonzero on divergence or zero spill.
+  * Usage: runMain graft.tools.SpillGate [sfDir] [default|all|q1,q2,…]
+  * (default sf0.1 — spill volume needs real rows). Exits nonzero on
+  * divergence or zero spill.
   */
 object SpillGate {
 
@@ -39,59 +39,27 @@ object SpillGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val queries: Seq[String] =
-      if (args.length > 1)
-        args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else Queries
+    val queries = Gates.queryList(args.lift(1), Queries)
 
-    val baseline = ClusterGate.runPass("local[8]", cluster = false,
-      sfDir, queries)
-
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // every sorter/agg-map spills after 500 elements — thousands of
-      // external merge files per task at sf0.1, the 100 TB shape
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val baseline = Gates.runPass(Gates.local, sfDir, queries)
     val memSpilled = new AtomicLong(0)
     val diskSpilled = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    var bad = 0
-    try {
-      println(f"[spill-gate] ${"query"}%-24s ${"rows"}%7s  verdict")
-      queries.foreach { q =>
-        val got =
-          try Right(ClusterGate.canon(graft.SparkEntry.queries(q)(spark, sfDir)))
-          catch { case e: Throwable =>
-            Left(s"${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(160))
+    // every sorter/agg-map spills after 500 elements — thousands of
+    // external merge files per task at sf0.1, the 100 TB shape
+    val forced = Gates.runPass(
+      Gates.local.config(
+        "spark.shuffle.spill.numElementsForceSpillThreshold", "500"),
+      sfDir, queries,
+      _.sparkContext.addSparkListener(new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+          val m = e.taskMetrics
+          if (m != null) {
+            memSpilled.addAndGet(m.memoryBytesSpilled)
+            diskSpilled.addAndGet(m.diskBytesSpilled)
           }
-        (got, baseline(q)) match {
-          case (Right((hc, nc)), Right((hb, nb))) if hc == hb && nc == nb =>
-            println(f"[spill-gate] $q%-24s $nc%7d  OK")
-          case (g, b) =>
-            println(f"[spill-gate] $q%-24s ${0}%7d  DIVERGED ($g vs $b)")
-            bad += 1
         }
-      }
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+      }))
+    val bad = Gates.compare("spill-gate", queries, baseline, forced)
     println(f"[spill-gate] ${queries.size - bad}/${queries.size} identical " +
       f"with ${memSpilled.get / 1e6}%.0f MB memory-spilled / " +
       f"${diskSpilled.get / 1e6}%.0f MB disk-spilled")

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (UTC, small shuffle width).
+/** One shared local session per suite ([[Sessions]] confs, four threads
+  * and four shuffle partitions whatever `SPARK_GRAFT_CPUS` says).
   *
   * `local[4, 2]` (maxFailures = 2): task retries are ON, as on any real
   * cluster. RetrySpec injects attempt-0 task failures to prove the
@@ -13,14 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * task are unaffected.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.start(
+    Sessions.builder("local[4, 2]", 4).appName(getClass.getSimpleName))
 
   def resource(name: String): String =
     getClass.getClassLoader.getResource(name).getPath

@@ -101,6 +101,19 @@ class RanksSpec extends SparkSpec {
     }
   }
 
+  test("globalCumsum rejects decimal and double value columns before any job") {
+    val sc = spark.sparkContext
+    for (t <- Seq("decimal(18,2)", "double")) {
+      val df = randomDf(50, seed = 3).withColumn("x", col("v").cast(t))
+      sc.setJobGroup(s"cumsum-$t", "type check")
+      val e = try intercept[IllegalArgumentException](
+          Ranks.globalCumsum(df, Seq(col("k"), col("id")), 4, Seq("c" -> "x")))
+        finally sc.clearJobGroup()
+      assert(e.getMessage.contains("value column x must be LONG"), t)
+      assert(sc.statusTracker.getJobIdsForGroup(s"cumsum-$t").isEmpty, t)
+    }
+  }
+
   test("descCountKey string order equals (cnt DESC, tok ASC)") {
     val rnd = new scala.util.Random(9)
     val toks = (1 to 400).map(i =>
