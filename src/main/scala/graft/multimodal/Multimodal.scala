@@ -648,7 +648,7 @@ object Multimodal {
     var avih: Option[(Int, Long, Int, Int)] = None // µs/frame, total, w, h
     var vids: Option[(Int, Int)] = None // strf (w, h), BI_RGB 24-bit only
     var curStrlVids = false // does the CURRENT strl's strh say `vids`?
-    var frames = Vector.newBuilder[(Int, Int)]
+    val frames = Vector.newBuilder[(Int, Int)]
     var nFrames = 0
     var ok = true
     // walk [from, until) as a chunk sequence; `inside` names the list we
@@ -2051,28 +2051,6 @@ object Multimodal {
         }
       }
       .toDF()
-  }
-
-  /** Resize stage: binary → binary, executor-side (a real image resize
-    * changes only the body — the stub keeps every `factor`-th byte, the
-    * degenerate nearest-neighbor downsample). Demonstrates that media
-    * transforms compose relationally: payload in, payload out, metadata
-    * updated, no driver round-trip. */
-  def resizePayload(spark: SparkSession, packed: DataFrame, factor: Int): DataFrame = {
-    require(factor > 0, s"resize factor must be positive, got $factor")
-    import spark.implicits._
-    packed
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val out = new Array[Byte]((bytes.length + factor - 1) / factor)
-          var i = 0
-          while (i < out.length) { out(i) = bytes(i * factor); i += 1 }
-          (id, out, bytes.length, out.length)
-        }
-      }
-      .toDF("doc_id", "payload", "orig_bytes", "resized_bytes")
   }
 
   /** Frame-sample stage (the video path): payload → fixed-size frames →

@@ -249,9 +249,7 @@ object Dedup {
     * increment, it is a corpus, and the caller should run
     * [[jaccardPairs]] on the union instead. */
   /** Exploded posting projection — (blockCols…, id_<side>, sz_<side>,
-    * __sh) — shared by the batch incremental join and the streaming
-    * probe ([[graft.streaming.Streams.corpusPostingMatches]]) so the two
-    * halves cannot drift on shingle/size semantics. */
+    * __sh) — of both sides of the incremental join. */
   private[graft] def postings(df: DataFrame, id: String, shingleCol: String,
       blockCols: Seq[String], side: String): DataFrame = df.select(
     (blockCols.map(col) :+ col(id).as(s"id_$side") :+

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed sparse linear algebra over COO (coordinate-list) frames —
@@ -43,18 +43,5 @@ object Linalg {
     left.join(right, "k")
       .groupBy("i", "j")
       .agg(sum(col("v") * col("w")).as("c"))
-  }
-
-  /** Aᵀ·A (the Gram / co-occurrence contraction) without materializing
-    * the transpose: self-join on the row index. Emits the FULL symmetric
-    * matrix; callers wanting the upper triangle filter j1 <= j2. */
-  def gram(a: DataFrame, iCol: String, jCol: String, vCol: String): DataFrame = {
-    val x = a.select(col(iCol).as("r"), col(jCol).as("j1"),
-      col(vCol).cast("long").as("v1"))
-    val y = a.select(col(iCol).as("r"), col(jCol).as("j2"),
-      col(vCol).cast("long").as("v2"))
-    x.join(y, "r")
-      .groupBy("j1", "j2")
-      .agg(sum(col("v1") * col("v2")).as("c"))
   }
 }

@@ -20,10 +20,7 @@ object Quality {
     */
   /** The rule set as aggregate columns: one row count plus one
     * conditional violation sum per rule (NULL predicates count as
-    * non-violations — `when` takes the otherwise branch). Shared by the
-    * batch [[checkBlock]] and the streaming
-    * [[graft.streaming.Streams.qualityMonitor]] so the two can never
-    * drift on rule semantics. */
+    * non-violations — `when` takes the otherwise branch). */
   def ruleAggs(checks: Seq[(String, Column)],
       countName: String, prefix: String): Seq[Column] =
     count(lit(1)).as(countName) +:

@@ -8,12 +8,10 @@ import org.apache.spark.sql.functions._
   * two hex chars (256 buckets; 'cc' = 204 ⇒ 79.7% train, 'e6' = 230 ⇒
   * 10.2% valid, rest test).
   *
-  * One expression, shared by the batch query (q_hash_split) and the
-  * streaming router (Streams.routeBySplit) so the two can never drift:
-  * assignment is a pure function of the key, which is exactly what makes
-  * it safe on a stream — no RNG state, no reprocessing hazard (a replayed
-  * record lands in the same split), and an engine-portable definition
-  * (md5 hex is identical everywhere).
+  * One expression (q_hash_split): assignment is a pure function of the
+  * key, which is exactly what makes it safe on a stream — no RNG state,
+  * no reprocessing hazard (a replayed record lands in the same split),
+  * and an engine-portable definition (md5 hex is identical everywhere).
   */
 object Router {
 

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CosineSim.cosine_sim
 
@@ -344,7 +344,8 @@ object Similarity {
     * At 100 TB the two multiply: nProbe/nCells of the corpus × m bytes
     * per vector — the scan reads ~(8/1024)·(8/256) of the raw data,
     * and the cell filter is a partition-prunable predicate when the
-    * encoded table is written clustered by cell (Sinks.rangeClustered).
+    * encoded table is written range-clustered by cell
+    * (`repartitionByRange` + `sortWithinPartitions`).
     * `assigned` must carry both the `cluster` column (ivfAssign) and
     * the `code` column (pqEncode). */
   def ivfPqTopK(assigned: DataFrame, centroids: Array[Array[Double]],
@@ -976,10 +977,8 @@ object Similarity {
     * a bit-63 hash (valid: hashes are signed-long bitmaps) bands
     * correctly. Output: (key_a, key_b, hash_a, hash_b, hamming),
     * key_a < key_b, each qualifying pair once. */
-  /** Band projection shared by [[hammingPairs]] and the streaming twin
-    * ([[graft.streaming.Streams.hammingMatches]]) — ONE definition of
-    * "the bands", so the two halves cannot drift. Output:
-    * (k, h, band_idx, band_val). */
+  /** Band projection of [[hammingPairs]] — ONE definition of "the
+    * bands". Output: (k, h, band_idx, band_val). */
   def hashBands(hashes: DataFrame, keyCol: String, hashCol: String,
       bands: Int, bandBits: Int): DataFrame = {
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1

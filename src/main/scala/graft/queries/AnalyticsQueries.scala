@@ -814,7 +814,6 @@ object AnalyticsQueries {
   val lorenzGini = QuerySpec(
     "q_lorenz_gini",
     (s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val per = orders(s, d)
         .groupBy("o_custkey")
         .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("sp"))

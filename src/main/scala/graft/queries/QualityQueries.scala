@@ -1451,7 +1451,6 @@ object QualityQueries {
   val spearman = QuerySpec(
     "q_spearman",
     (s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val per = orders(s, d)
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("m"),
@@ -1548,7 +1547,6 @@ object QualityQueries {
   val kruskalWallis = QuerySpec(
     "q_kruskal",
     (s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val rows = orders(s, d).select(col("o_orderpriority").as("g"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) " +
           "DIV 10000").as("v"))
@@ -2034,7 +2032,6 @@ object QualityQueries {
   val wilcoxon = QuerySpec(
     "q_wilcoxon",
     (s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val cents = expr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
       val per = orders(s, d)

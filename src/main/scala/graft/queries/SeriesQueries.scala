@@ -1696,7 +1696,6 @@ object SeriesQueries {
           W.orderBy(col("day").asc_nulls_last)))
         .withColumn("p", sum("rev").over(w))
         .filter(col("i") < col("n"))
-      val d38 = "decimal(38,0)"
       // CASE s = 0: an all-zero (or all-NULL-revenue) series makes the
       // constant-S quantizer divisor 0 — NULL score like DuckDB's
       // x // 0, never an ANSI DIVIDE_BY_ZERO (hollow DegenGate)

@@ -1428,16 +1428,16 @@ object TextQueries {
     * odd offsets within each run — gaps-and-islands (grp = pos − rank)
     * plus a parity test replays the kernel bit-for-bit. */
   private def bpeStepSql(i: Int): String = s"""
-      x$i AS (SELECT w, cnt, string_split(w, ' ') AS ls FROM s$i),
-      p$i AS (SELECT l, r, CAST(sum(cnt) AS BIGINT) AS freq FROM (
+      x$i AS MATERIALIZED (SELECT w, cnt, string_split(w, ' ') AS ls FROM s$i),
+      p$i AS MATERIALIZED (SELECT l, r, CAST(sum(cnt) AS BIGINT) AS freq FROM (
                 SELECT ls[pos] AS l, ls[pos+1] AS r, cnt
                 FROM (SELECT cnt, ls,
                              unnest(generate_series(1, len(ls)-1)) AS pos
                       FROM x$i WHERE len(ls) >= 2) AS e$i) AS pe$i
               GROUP BY l, r),
-      m$i AS (SELECT l, r, freq FROM p$i
+      m$i AS MATERIALIZED (SELECT l, r, freq FROM p$i
               ORDER BY freq DESC, l DESC, r DESC LIMIT 1),
-      q$i AS (SELECT w, cnt, pos, ls[pos] AS sym,
+      q$i AS MATERIALIZED (SELECT w, cnt, pos, ls[pos] AS sym,
                      CASE WHEN pos < len(ls) AND ls[pos] = m.l
                                AND ls[pos+1] = m.r
                           THEN 1 ELSE 0 END AS mt
@@ -1450,19 +1450,19 @@ object TextQueries {
               FROM (SELECT w, cnt, ls,
                            unnest(generate_series(1, len(ls))) AS pos
                     FROM x$i) AS t$i LEFT JOIN m$i AS m ON TRUE),
-      g$i AS (SELECT w, cnt, pos, sym, mt,
+      g$i AS MATERIALIZED (SELECT w, cnt, pos, sym, mt,
                      CASE WHEN mt = 1
                           THEN pos - row_number() OVER (PARTITION BY w, mt
                                                         ORDER BY pos)
                           ELSE -1 END AS grp
               FROM q$i),
-      h$i AS (SELECT w, cnt, pos, sym, mt,
+      h$i AS MATERIALIZED (SELECT w, cnt, pos, sym, mt,
                      CASE WHEN mt = 1
                           THEN row_number() OVER (PARTITION BY w, grp
                                                   ORDER BY pos)
                           ELSE 0 END AS rin
               FROM g$i),
-      o$i AS (SELECT ow, cnt, pos,
+      o$i AS MATERIALIZED (SELECT ow, cnt, pos,
                      CASE WHEN mg = 1 THEN sym || nxt
                           WHEN lag(mg) OVER (PARTITION BY ow ORDER BY pos) = 1
                           THEN NULL
@@ -1472,28 +1472,44 @@ object TextQueries {
                                 THEN 1 ELSE 0 END AS mg,
                            lead(sym) OVER (PARTITION BY w ORDER BY pos) AS nxt
                     FROM h$i) AS i$i),
-      s${i + 1} AS (SELECT string_agg(outsym, ' ' ORDER BY pos) AS w,
+      s${i + 1} AS MATERIALIZED (SELECT string_agg(outsym, ' ' ORDER BY pos) AS w,
                            any_value(cnt) AS cnt
                     FROM o$i GROUP BY ow)"""
+
+  /** The BPE oracle's CTE chain, shared by q_bpe_learn, q_bpe_encode
+    * and q_fertility: the word-frequency table `w0`, its character-split
+    * form `s1`, the 8 unrolled rounds ([[bpeStepSql]], ending in `s9`)
+    * and, with `dict`, the final word table as a (word, nt) dictionary.
+    * Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and each
+    * round reads its predecessor several times, so an inlined chain
+    * re-derives every earlier round per reference (the q_kcore lesson;
+    * minutes per query at sf0.001, against well under a second
+    * materialized). */
+  private def bpeChainSql(dict: Boolean): String = s"""
+      w0 AS MATERIALIZED (
+        SELECT raw, CAST(count(*) AS BIGINT) AS cnt FROM (
+          SELECT unnest(string_split(text, ' ')) AS raw FROM documents) AS u0
+        WHERE raw <> '' GROUP BY raw),
+      s1 AS MATERIALIZED (
+             SELECT rtrim(regexp_replace(raw, '(.)', '\\1 ', 'g')) AS w, cnt
+             FROM w0),
+      ${(1 to 8).map(bpeStepSql).mkString(",")}""" + (if (dict) """,
+      dict AS MATERIALIZED (SELECT replace(w, ' ', '') AS word,
+                      CAST(len(string_split(w, ' ')) AS BIGINT) AS nt
+               FROM s9)""" else "")
 
   /** Distributed BPE merge training over the corpus vocabulary
     * (Bpe.train scaladoc carries the 100 TB shape: after one corpus
     * reduce to the word-frequency table, every round is bounded by
     * VOCABULARY size, with one pair crossing to the driver per round).
-    * The oracle replays all 8 rounds exactly — [[bpeStepSql]] unrolls
+    * The oracle replays all 8 rounds exactly — [[bpeChainSql]] unrolls
     * the loop as chained CTEs, so even this iterative trainer is
     * hash-gated end-to-end rather than verdict-pinned. */
   val bpeLearn = QuerySpec(
     "q_bpe_learn",
     (s, d) => graft.ops.Bpe.train(documents(s, d), "text", nMerges = 8),
     Some(s"""
-      WITH w0 AS (
-        SELECT raw, CAST(count(*) AS BIGINT) AS cnt FROM (
-          SELECT unnest(string_split(text, ' ')) AS raw FROM documents) AS u0
-        WHERE raw <> '' GROUP BY raw),
-      s1 AS (SELECT rtrim(regexp_replace(raw, '(.)', '\\1 ', 'g')) AS w, cnt
-             FROM w0),
-      ${(1 to 8).map(bpeStepSql).mkString(",")}
+      WITH ${bpeChainSql(dict = false)}
       SELECT * FROM (
         ${(1 to 8)
           .map(i => s"SELECT $i AS step, l AS lhs, r AS rhs, freq FROM m$i")
@@ -1512,16 +1528,7 @@ object TextQueries {
       graft.ops.Bpe.encode(documents(s, d), "doc_id", "text", nMerges = 8)
         .orderBy("doc_id"),
     Some(s"""
-      WITH w0 AS (
-        SELECT raw, CAST(count(*) AS BIGINT) AS cnt FROM (
-          SELECT unnest(string_split(text, ' ')) AS raw FROM documents) AS u0
-        WHERE raw <> '' GROUP BY raw),
-      s1 AS (SELECT rtrim(regexp_replace(raw, '(.)', '\\1 ', 'g')) AS w, cnt
-             FROM w0),
-      ${(1 to 8).map(bpeStepSql).mkString(",")},
-      dict AS (SELECT replace(w, ' ', '') AS word,
-                      CAST(len(string_split(w, ' ')) AS BIGINT) AS nt
-               FROM s9),
+      WITH ${bpeChainSql(dict = true)},
       dw AS (SELECT doc_id, raw AS word FROM (
                SELECT doc_id, unnest(string_split(text, ' ')) AS raw
                FROM documents) AS x WHERE raw <> '')
@@ -2317,16 +2324,7 @@ object TextQueries {
         .orderBy("lang")
     },
     Some(s"""
-      WITH w0 AS (
-        SELECT raw, CAST(count(*) AS BIGINT) AS cnt FROM (
-          SELECT unnest(string_split(text, ' ')) AS raw FROM documents) AS u0
-        WHERE raw <> '' GROUP BY raw),
-      s1 AS (SELECT rtrim(regexp_replace(raw, '(.)', '\\1 ', 'g')) AS w, cnt
-             FROM w0),
-      ${(1 to 8).map(bpeStepSql).mkString(",")},
-      dict AS (SELECT replace(w, ' ', '') AS word,
-                      CAST(len(string_split(w, ' ')) AS BIGINT) AS nt
-               FROM s9),
+      WITH ${bpeChainSql(dict = true)},
       dw AS (SELECT doc_id, raw AS word FROM (
                SELECT doc_id, unnest(string_split(text, ' ')) AS raw
                FROM documents) AS x WHERE raw <> ''),

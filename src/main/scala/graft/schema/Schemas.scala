@@ -8,22 +8,6 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
-  /** Parsed-and-cleaned GSOD daily observation (FIXTURES.md A1; reference
-    * parse at /root/reference/untitled.py:42-60). */
-  val gsodObservation: StructType = StructType(Seq(
-    StructField("usaf", StringType, nullable = false),
-    StructField("wban", IntegerType, nullable = true),
-    StructField("date", DateType, nullable = true),
-    StructField("temp", DoubleType, nullable = true),
-    StructField("dewp", DoubleType, nullable = true),
-    StructField("wdsp", DoubleType, nullable = true),
-    StructField("max", DoubleType, nullable = true),
-    StructField("min", DoubleType, nullable = true),
-    StructField("prcp", DoubleType, nullable = true),
-    StructField("year", IntegerType, nullable = true),
-    StructField("month", IntegerType, nullable = true),
-    StructField("day", IntegerType, nullable = true)))
-
   /** Station-history dimension (FIXTURES.md A2; isd-history.csv at
     * /root/reference/untitled.py:25). */
   val stationHistory: StructType = StructType(Seq(

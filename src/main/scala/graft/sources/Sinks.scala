@@ -68,42 +68,4 @@ object Sinks {
   def readJson(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** XML sink/source (built into Spark 4's sql module): one row per
-    * `rowTag` element; schema-first read like CSV/JSON. */
-  def writeXml(df: DataFrame, path: String, rowTag: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("rowTag", rowTag).xml(path)
-
-  def readXml(spark: SparkSession, path: String, rowTag: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.option("rowTag", rowTag).schema(schema).xml(path)
-
-  /** Range-clustered parquet write: repartitionByRange + in-partition
-    * sort on the cluster keys before writing. Files end up RANGE-DISJOINT
-    * on the key, so parquet row-group min/max statistics actually prune —
-    * a range predicate at read time skips whole files/row-groups instead
-    * of scanning everything. At 100 TB this layout decision (made once,
-    * write-side) is worth more than any read-side tuning; it's the
-    * open-format equivalent of clustering/Z-ordering. */
-  def writeRangeClustered(df: DataFrame, path: String,
-      clusterCols: Seq[String], partitions: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    val cols = clusterCols.map(col)
-    df.repartitionByRange(partitions, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Raw-file ingest for the multimodal path: Spark's `binaryFile` source
-    * yields (path, modificationTime, length, content) — one row per file,
-    * content as the opaque binary column graft.multimodal operates on.
-    * `pathGlobFilter` prunes by extension DURING listing (never reads
-    * skipped files' bytes), and at 100 TB the source parallelizes the
-    * listing and spreads files across tasks — the standard way image /
-    * audio corpora enter a DataFrame pipeline. */
-  def readBinaryFiles(spark: SparkSession, path: String,
-      glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(path)
 }

@@ -455,10 +455,9 @@ object Replay {
     * STATELESS — every micro-batch joins against the static table, no
     * state store, no watermark — which is why this is the 100 TB shape
     * for feature enrichment against a profile/dimension store: the dim
-    * broadcasts once per micro-batch and the stream never buffers.
-    * [[Streams.corpusPostingMatches]] and [[Streams.hammingMatches]] are
-    * the same operator class (stream-static equi-join, spec-proven); this
-    * gate hash-certifies the class end-to-end against the batch oracle. */
+    * broadcasts once per micro-batch and the stream never buffers. This
+    * gate hash-certifies the stream-static equi-join end-to-end against
+    * the batch oracle. */
   def enrich(spark: SparkSession, dir: String, nSlices: Int = 8): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val dim = graft.Tables.customer(spark, dir)

@@ -20,7 +20,7 @@ final case class UserTotals(user_id: Long, n_events: Long, total_value: Double)
   * checklist): `flatMapGroupsWithState` over a `KeyValueGroupedDataset` —
   * the escape hatch for aggregations the built-in windowed operators can't
   * express (here: unbounded per-user running totals emitted on every
-  * update).
+  * update, and per-user event transitions that straddle micro-batches).
   *
   * Scale: state lives in the state store, partitioned by group key —
   * executors hold only their keys' state; a production job bounds state
@@ -83,418 +83,8 @@ object Stateful {
         })
   }
 
-  /** One purchase credited to the user's most recent prior view. */
-  final case class Attribution(
-      event_id: Long, user_id: Long,
-      attr_event_id: Option[Long], gap_us: Option[Long])
-
-  /** Latest view per user, carried across micro-batches. */
-  final case class LastView(ts: Timestamp, event_id: Long)
-
   private def micros(t: Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
-
-  /** Streaming last-touch attribution — the streaming twin of
-    * q_attribution's carried-forward window: state is ONE view per user
-    * (constant-size, like the transition tracker), each purchase emits
-    * immediately with the latest prior view and the exact-µs gap, and a
-    * view→purchase pair straddling a micro-batch boundary is still
-    * attributed. Purchases with no prior view emit with NULL attribution
-    * (first-session conversions), exactly as the batch twin keeps them. */
-  def lastTouchAttribution(events: Dataset[Event]): Dataset[Attribution] = {
-    implicit val stateEnc = Encoders.product[LastView]
-    implicit val outEnc = Encoders.product[Attribution]
-    implicit val longEnc = Encoders.scalaLong
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Event], state: GroupState[LastView]) => {
-          val ordered = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var lastView = state.getOption
-          val out = Seq.newBuilder[Attribution]
-          ordered.foreach { e =>
-            if (e.event_type == "purchase")
-              out += Attribution(e.event_id, uid, lastView.map(_.event_id),
-                lastView.map(v => micros(e.ts) - micros(v.ts)))
-            if (e.event_type == "view" &&
-                // monotone state: a view arriving LATE (earlier event time
-                // than the carried one) must not regress the carried
-                // "latest view" — later purchases would be credited to an
-                // older touch than the batch twin computes. Late data
-                // beyond this guard is the append-mode watermark
-                // trade-off, as with every streaming twin here.
-                lastView.forall(v => Ordering[(Long, Long)].lt(
-                  (micros(v.ts), v.event_id), (micros(e.ts), e.event_id))))
-              lastView = Some(LastView(e.ts, e.event_id))
-          }
-          lastView.foreach(state.update)
-          out.result().iterator
-        })
-  }
-
-  /** A document row for the streaming reservoir. */
-  final case class DocRow(doc_id: Long, lang: String, n_chars: Long)
-
-  final case class ReservoirEntry(key: Double, doc_id: Long, n_chars: Long)
-
-  /** Per-group reservoir state: the current top-k entries plus a count
-    * of every DELIVERY consumed (the count lets a consumer pick the
-    * FINAL emission per group out of an update-mode sink). NOTE: n_seen
-    * is a delivery counter, not a distinct-row counter — the MEMBERSHIP
-    * is replay-idempotent, but a redelivered row still increments
-    * n_seen (bounded state cannot remember every evicted id); don't use
-    * it as an inclusion-probability denominator under at-least-once
-    * delivery. */
-  final case class ReservoirState(n_seen: Long, members: Seq[ReservoirEntry])
-
-  final case class ReservoirOut(lang: String, n_seen: Long, doc_id: Long,
-      n_chars: Long, key: Double)
-
-  /** Streaming weighted reservoir — the stream twin of
-    * q_weighted_sample: per group (lang), maintain the k best rows by
-    * the SAME Efraimidis–Spirakis key `ln(u)/w` the batch sampler
-    * computes ([[graft.ops.Router.aresKey]]; the kernel below replays
-    * md5 → 12 hex digits → (v+1)/2⁴⁸ → ln(u)/w bit-for-bit, and
-    * StatefulSpec cross-checks it against the Spark expression). Because
-    * the key is a pure function of (doc, weight), the operator is
-    * REPLAY-IDEMPOTENT: a reprocessed row computes the same key and the
-    * doc_id-dedup in the merge makes it a no-op — the reservoir after
-    * any prefix of the stream equals the batch top-k over the rows seen,
-    * which no RNG-based reservoir can promise.
-    *
-    * State per group is exactly k entries + one counter — constant, no
-    * timeout needed; each update emits the group's full current
-    * reservoir (update mode), stamped with the monotone n_seen delivery
-    * counter so the final emission is identifiable downstream (see the
-    * ReservoirState caveat: replays keep MEMBERSHIP intact but do
-    * advance the counter). */
-  def weightedReservoir(docs: Dataset[DocRow], k: Int): Dataset[ReservoirOut] = {
-    require(k >= 1, s"k=$k must be at least 1")
-    implicit val stateEnc = Encoders.product[ReservoirState]
-    implicit val outEnc = Encoders.product[ReservoirOut]
-    implicit val strEnc = Encoders.STRING
-    docs
-      .groupByKey(_.lang)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (lang: String, rows: Iterator[DocRow], state: GroupState[ReservoirState]) => {
-          val prev = state.getOption.getOrElse(ReservoirState(0L, Seq.empty))
-          val fresh = rows.toSeq
-          val merged = (prev.members ++ fresh.map(r =>
-              ReservoirEntry(aresKeyLocal(r.doc_id, r.n_chars), r.doc_id, r.n_chars)))
-            .groupBy(_.doc_id).map(_._2.head).toSeq // replay dedup
-            .sortBy(e => (-e.key, e.doc_id))
-            .take(k)
-          val next = ReservoirState(prev.n_seen + fresh.size, merged)
-          state.update(next)
-          merged.iterator.map(e =>
-            ReservoirOut(lang, next.n_seen, e.doc_id, e.n_chars, e.key))
-        })
-  }
-
-  /** One KMV sketch member: 48-bit hash + the user it came from. */
-  final case class KmvEntry(h: Long, user_id: Long)
-
-  /** Streaming KMV state: the k smallest distinct-user hashes seen so
-    * far (ALL hashes while fewer than k distinct users have arrived). */
-  final case class KmvState(members: Seq[KmvEntry])
-
-  /** One estimate emission per group per micro-batch. */
-  final case class KmvOut(event_type: String, sketch_size: Int, est: Long)
-
-  /** Streaming distinct-user cardinality per event type via the KMV
-    * sketch ([[graft.ops.Kmv]] is the batch twin): state is the k
-    * smallest md5-derived user hashes — constant size, mergeable, and
-    * REPLAY-IDEMPOTENT for the same reason the weighted reservoir is:
-    * the hash is a pure function of the user, so a reprocessed event
-    * re-derives the same entry and the user-dedup makes it a no-op.
-    * Unlike a streaming `approx_count_distinct`, the carried sketch can
-    * be INTERSECTED with another segment's downstream (Kmv scaladoc).
-    *
-    * Estimate rule is the batch rule verbatim: while the sketch holds
-    * fewer than k members it IS the distinct set (est = size); at k the
-    * integer estimator (k−1)·2⁴⁸ DIV (h₍k₎+1) applies. StatefulSpec
-    * proves the post-any-prefix emission equals the batch operator on
-    * the same rows. */
-  def kmvDistinct(events: Dataset[Event], k: Int): Dataset[KmvOut] = {
-    require(k >= 2, s"sketch width k=$k must be at least 2")
-    implicit val stateEnc = Encoders.product[KmvState]
-    implicit val outEnc = Encoders.product[KmvOut]
-    implicit val strEnc = Encoders.STRING
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (tpe: String, rows: Iterator[Event], state: GroupState[KmvState]) => {
-          val prev = state.getOption.getOrElse(KmvState(Seq.empty))
-          val merged = (prev.members ++ rows.map(e =>
-              KmvEntry(kmvHashLocal(e.user_id), e.user_id)))
-            .groupBy(_.user_id).map(_._2.head).toSeq // distinct users
-            .sortBy(e => (e.h, e.user_id))
-            .take(k)
-          state.update(KmvState(merged))
-          val est =
-            if (merged.size < k) merged.size.toLong
-            else ((k - 1).toLong * graft.ops.Kmv.HashDomain) /
-              (merged.last.h + 1)
-          Iterator.single(KmvOut(tpe, merged.size, est))
-        })
-  }
-
-  /** Misra–Gries summary state: at most k counters plus the number of
-    * rows consumed so far (the error bound needs both). */
-  final case class MgState(items: Seq[String], counts: Seq[Long], n_seen: Long)
-
-  /** One summary entry emitted after a micro-batch. */
-  final case class MgOut(event_type: String, item: String, est: Long,
-      n_seen: Long)
-
-  /** Streaming heavy hitters per event type via the MISRA–GRIES summary
-    * (the deterministic frequent-items sketch; SpaceSaving's ancestor):
-    * at most k counters per group — arrival increments its counter,
-    * inserts while there is room, otherwise decrements ALL counters and
-    * evicts zeros. Guarantees, proven in StatefulSpec against exact
-    * counts: est(x) ≤ f(x) ≤ est(x) + (N − Σest)/(k+1), and every item
-    * with f(x) > N/(k+1) is IN the summary — the hot-token tracker that
-    * needs k counters where a per-item hashmap needs the vocabulary.
-    * The batch CMS query (q_heavy_hitters) is the probe-style twin;
-    * Misra–Gries needs no probe list, which is what a STREAM needs.
-    *
-    * Unlike the KMV/reservoir twins this summary is ORDER-sensitive
-    * (not replay-idempotent), so each batch's rows fold in (ts,
-    * event_id) order — deterministic for a fixed stream, and the
-    * in-memory sort is bounded by one group's rows in one BATCH (the
-    * eventTransitions caveat). */
-  def misraGries(events: Dataset[Event], k: Int): Dataset[MgOut] = {
-    require(k >= 1, s"summary width k=$k must be at least 1")
-    implicit val stateEnc = Encoders.product[MgState]
-    implicit val outEnc = Encoders.product[MgOut]
-    implicit val strEnc = Encoders.STRING
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (tpe: String, rows: Iterator[Event], state: GroupState[MgState]) => {
-          val prev = state.getOption.getOrElse(MgState(Seq.empty, Seq.empty, 0L))
-          var counters = prev.items.zip(prev.counts).toMap
-          val fresh = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          fresh.foreach { e =>
-            val item = e.user_id.toString
-            counters.get(item) match {
-              case Some(c) => counters = counters.updated(item, c + 1)
-              case None if counters.size < k =>
-                counters = counters.updated(item, 1L)
-              case None =>
-                counters = counters.iterator
-                  .map { case (i, c) => i -> (c - 1) }
-                  .filter(_._2 > 0L).toMap
-            }
-          }
-          val sorted = counters.toSeq.sortBy { case (i, c) => (-c, i) }
-          val next = MgState(sorted.map(_._1), sorted.map(_._2),
-            prev.n_seen + fresh.size)
-          state.update(next)
-          sorted.iterator.map { case (i, c) => MgOut(tpe, i, c, next.n_seen) }
-        })
-  }
-
-  /** Executor-side replica of the house 48-bit md5 hash (Kmv.hash48 /
-    * the aresKey uniform): md5(salt + key) → first 12 hex digits →
-    * long. ONE definition serves every local twin so a padding/charset
-    * fix can never drift between them. */
-  private def hex48Local(salt: String, key: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest((salt + key).getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 12), 16)
-  }
-
-  /** Executor-side replica of Kmv.hash48's column expression. */
-  private[streaming] def kmvHashLocal(userId: Long,
-      salt: String = "kmv42:"): Long = hex48Local(salt, userId.toString)
-
-  /** Executor-side replica of Router.aresKey's column expression — same
-    * md5, same 12-hex-digit uniform, same ln(u)/w. */
-  private[streaming] def aresKeyLocal(docId: Long, weight: Long,
-      salt: String = "ws42:"): Double = {
-    val v = hex48Local(salt, docId.toString)
-    // StrictMath, not Math: Catalyst's Logarithm expression evaluates
-    // through StrictMath.log, and the two differ in the last ulp on some
-    // inputs — StatefulSpec pins bit-equality against the column form
-    StrictMath.log((v + 1) / 281474976710656.0) / weight
-  }
-
-  /** One streamed embedding row (dims as doubles for the Encoder; the
-    * batch loader's float→double cast is value-exact). */
-  final case class VecRow(vec_id: Long, dims: Seq[Double])
-
-  /** Per-segment covariance partial after a micro-batch: n rows absorbed
-    * plus the d first moments and d(d+1)/2 second moments as EXACT
-    * decimals, flattened sums-first then row-major upper triangle. */
-  final case class CovPartial(seg: Int, n: Long, stats: Seq[BigDecimal])
-
-  /** Spark's double→DECIMAL(38,18) cast, replayed locally: Catalyst casts
-    * through BigDecimal(double) — the SHORTEST decimal representation
-    * (Double.toString), not the exact binary expansion — then rounds
-    * half-up to scale 18. Divergence here would silently break the
-    * stream≡batch equality, so StatefulSpec pins this function against
-    * the column cast bit-for-bit. */
-  private[streaming] def decimal18Local(x: Double): BigDecimal =
-    BigDecimal(java.lang.Double.toString(x))
-      .setScale(18, scala.math.BigDecimal.RoundingMode.HALF_UP)
-
-  /** Streaming covariance sketch over the leading `d` embedding
-    * dimensions — the drift monitor a live embedding pipeline runs next
-    * to [[graft.ops.Pca]]'s batch PCA: per segment (vec_id mod
-    * `segments` — state shards across executors like every keyed state
-    * here), the state is the exact decimal sufficient statistics
-    * (n, Σx_i, Σx_i·x_j), constant-size per segment (d + d(d+1)/2
-    * decimals), and every micro-batch emits the segment's partial.
-    * Decimal sums are exact and order-free, so partials MERGE by plain
-    * addition: summing all segments after ANY prefix of batches is
-    * bit-identical to the batch decimal aggregate over the rows arrived
-    * so far (StatefulSpec proves it per batch), which is exactly
-    * [[graft.ops.Pca.covariance]]'s input — the streaming and batch
-    * covariance can never drift apart.
-    *
-    * Delivery contract: counts absorb every delivered row (the
-    * weightedReservoir n_seen caveat) — exactly-once under Structured
-    * Streaming's checkpointed state; an at-least-once source needs a
-    * dedup-within-watermark upstream. */
-  /** Carried covariance-sketch state (object-level for the Encoder). */
-  final case class CovState(n: Long, stats: Seq[BigDecimal])
-
-  def covarianceSketch(vecs: Dataset[VecRow], d: Int,
-      segments: Int): Dataset[CovPartial] = {
-    require(d >= 1 && segments >= 1,
-      s"dims d=$d and segments=$segments must be positive")
-    implicit val stateEnc = Encoders.product[CovState]
-    implicit val outEnc = Encoders.product[CovPartial]
-    implicit val intEnc = Encoders.scalaInt
-    val width = d + d * (d + 1) / 2
-    val zero = BigDecimal(0).setScale(18)
-    vecs
-      .groupByKey(v => math.floorMod(v.vec_id, segments.toLong).toInt)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (seg: Int, rows: Iterator[VecRow], state: GroupState[CovState]) => {
-          val prev = state.getOption.getOrElse(
-            CovState(0L, Vector.fill(width)(zero)))
-          var n = prev.n
-          val acc = prev.stats.toArray
-          rows.foreach { v =>
-            require(v.dims.length >= d,
-              s"vector ${v.vec_id} has ${v.dims.length} dims, sketch needs $d")
-            n += 1
-            var i = 0
-            while (i < d) {
-              acc(i) = acc(i) + decimal18Local(v.dims(i))
-              i += 1
-            }
-            var c = d
-            i = 0
-            while (i < d) {
-              var j = i
-              while (j < d) {
-                acc(c) = acc(c) + decimal18Local(v.dims(i) * v.dims(j))
-                c += 1; j += 1
-              }
-              i += 1
-            }
-          }
-          val next = CovState(n, acc.toVector)
-          state.update(next)
-          Iterator.single(CovPartial(seg, n, next.stats))
-        })
-  }
-
-  /** One keyed series point; `seq` is the total order within a key. */
-  final case class SeriesPoint(key: Long, seq: Long, v: Long)
-
-  final case class CusumState(nSeen: Long, sPlus: Long, sMinus: Long)
-
-  final case class CusumOut(key: Long, n_seen: Long, s_plus: Long,
-      s_minus: Long, alarm: Int)
-
-  /** Per-key ONLINE CUSUM drift monitor (Page 1954) — the streaming
-    * complement of the batch locator (graft.ops.Series.cusumChangepoint,
-    * which finds where a completed series broke; this one raises the
-    * alarm while the stream runs): one-sided sums against a reference
-    * level μ₀ with slack k,
-    *   S⁺ ← max(0, S⁺ + (v − μ₀ − k)),  S⁻ ← max(0, S⁻ + (μ₀ − k − v)),
-    * alarm when either exceeds `threshold`. All integer arithmetic —
-    * the fold replays exactly on any engine, and StatefulSpec pins
-    * stream ≡ driver-side fold across micro-batch boundaries.
-    *
-    * State is three longs per key (constant size, no buffers); within a
-    * micro-batch the group iterator sorts by `seq` — bounded by one
-    * key's points in one batch, the eventTransitions discipline.
-    * Production bounds idle keys with an event-time timeout. */
-  def cusumMonitor(points: Dataset[SeriesPoint], mu0: Long, slack: Long,
-      threshold: Long): Dataset[CusumOut] = {
-    implicit val stateEnc = Encoders.product[CusumState]
-    implicit val outEnc = Encoders.product[CusumOut]
-    implicit val longEnc = Encoders.scalaLong
-    points
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: Long, it: Iterator[SeriesPoint], state: GroupState[CusumState]) => {
-          val prev = state.getOption.getOrElse(CusumState(0L, 0L, 0L))
-          var n = prev.nSeen
-          var sp = prev.sPlus
-          var sm = prev.sMinus
-          val out = Vector.newBuilder[CusumOut]
-          it.toSeq.sortBy(_.seq).foreach { p =>
-            n += 1
-            sp = math.max(0L, sp + (p.v - mu0 - slack))
-            sm = math.max(0L, sm + (mu0 - slack - p.v))
-            out += CusumOut(key, n, sp, sm,
-              if (sp > threshold || sm > threshold) 1 else 0)
-          }
-          state.update(CusumState(n, sp, sm))
-          out.result().iterator
-        })
-  }
-
-  final case class FirstTouch(user_id: Long, event_type: String,
-      ts: Timestamp, event_id: Long)
-
-  final case class JourneyState(firsts: Map[String, (Timestamp, Long)])
-
-  /** Streaming first-occurrence tracker — the stateful twin of the
-    * q_journey_patterns projection: per user, maintain the FIRST
-    * (ts, event_id) of each event type across micro-batches and emit a
-    * row whenever a type's first occurrence is ESTABLISHED or IMPROVED
-    * (an out-of-order earlier event must correct it — replay-safe, so
-    * the final emission per (user, type) equals the batch min). State is
-    * bounded by the type alphabet (≤ |types| entries per user), the same
-    * cardinality argument that bounds the batch op's fan-out; the
-    * downstream journey-triple count consumes the emitted frame exactly
-    * as the batch query consumes its groupBy. */
-  def firstTouch(events: Dataset[Event]): Dataset[FirstTouch] = {
-    implicit val stateEnc = Encoders.product[JourneyState]
-    implicit val outEnc = Encoders.product[FirstTouch]
-    implicit val longEnc = Encoders.scalaLong
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Event], state: GroupState[JourneyState]) => {
-          var firsts = state.getOption.getOrElse(JourneyState(Map.empty)).firsts
-          val out = Vector.newBuilder[FirstTouch]
-          // sorted fold: within-batch order must not decide ties
-          evs.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val cand = (e.ts, e.event_id)
-            val better = firsts.get(e.event_type) match {
-              case None => true
-              case Some((t, id)) =>
-                micros(e.ts) < micros(t) ||
-                  (micros(e.ts) == micros(t) && e.event_id < id)
-            }
-            if (better) {
-              firsts += e.event_type -> cand
-              out += FirstTouch(uid, e.event_type, e.ts, e.event_id)
-            }
-          }
-          state.update(JourneyState(firsts))
-          out.result().iterator
-        })
-  }
 
   def runningUserTotals(events: Dataset[Event]): Dataset[UserTotals] = {
     implicit val stateEnc = Encoders.product[UserTotals]

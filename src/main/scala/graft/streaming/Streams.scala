@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count, explode, expr, lit, size}
+import org.apache.spark.sql.functions.{col, expr}
 import graft.ops.Windows
 
 /** Structured-Streaming twins of the batch event queries (SURVEY §2b E7).
@@ -71,96 +71,6 @@ object Streams {
         col("c_user").as("user_id"), col("click_ts"), col("view_ts"))
   }
 
-  /** Streaming twin of q_hash_split: route an ingest stream into
-    * train/valid/test by the deterministic key hash (graft.ops.Router —
-    * the SAME expression the batch query uses). Stateless, so it needs no
-    * watermark and adds no state store; determinism is what makes it
-    * replay-safe — a reprocessed record always lands in the same split.
-    * Downstream a `foreachBatch` (or partitionBy-on-write) fans the
-    * routed stream out to per-split sinks. */
-  def routeBySplit(records: DataFrame, keyCol: String): DataFrame =
-    records.withColumn("split", graft.ops.Router.hashSplit(col(keyCol)))
-
-  /** Stream-static posting probe: the streaming half of incremental
-    * near-dup ([[graft.ops.Dedup.incrementalJaccardPairs]]) — an
-    * in-flight document stream's exploded shingles equi-join the STATIC
-    * corpus posting list. Structured Streaming runs a stream-static
-    * inner join STATELESS (the static side is an ordinary table, nothing
-    * buffers, append mode, no watermark), so this stage adds zero state
-    * store; at 100 TB the static postings are the persisted inverted
-    * index the batch dedup already maintains. The pair AGGREGATION
-    * (count of shared shingles → Jaccard) is per-doc×corpus by
-    * construction — no cross-batch state can exist — so production runs
-    * it per micro-batch via `foreachBatch` on the batch operator itself;
-    * StreamingSpec proves both halves equal their batch twins.
-    *
-    * `docs` needs (doc_id, blockCols…, sh) with distinct shingles;
-    * `corpus` the same, static. Output: one row per (stream doc, corpus
-    * doc, shared shingle). The posting projection is
-    * [[graft.ops.Dedup.postings]] — the SAME builder the batch
-    * incremental join uses, so the two halves cannot drift. */
-  def corpusPostingMatches(docs: DataFrame, corpus: DataFrame,
-      blockCols: Seq[String] = Seq("lang")): DataFrame =
-    graft.ops.Dedup.postings(docs, "doc_id", "sh", blockCols, "new")
-      .join(graft.ops.Dedup.postings(corpus, "doc_id", "sh", blockCols, "old"),
-        blockCols :+ "__sh")
-
-  /** Streaming perceptual-hash matcher: incoming image hashes (a stream
-    * of (key, hash) rows, e.g. [[graft.multimodal.Multimodal
-    * .averageHash]] output) probe a STATIC corpus of known hashes via
-    * the band-equality blocking of [[graft.ops.Similarity.hammingPairs]]
-    * — the same [[graft.ops.Similarity.hashBands]] projection builds
-    * both sides, so the stream and batch halves cannot drift. The
-    * corpus side pre-drops buckets above `maxBucket` (a STATIC
-    * computation — the stream side needs no global counts and carries
-    * NO state: stream-static joins are stateless in Structured
-    * Streaming). One row per (new, old, matching band) with the exact
-    * Hamming distance — the [[corpusPostingMatches]] contract; the
-    * consumer dedups or aggregates downstream. */
-  def hammingMatches(stream: DataFrame, corpus: DataFrame,
-      bands: Int, bandBits: Int, maxHam: Int,
-      maxBucket: Int = 1024): DataFrame = {
-    import graft.ops.Similarity.hashBands
-    val corpusBands = hashBands(corpus, "key", "hash", bands, bandBits)
-    val keep = corpusBands.groupBy("band_idx", "band_val")
-      .agg(count(lit(1)).as("__bn")).filter(col("__bn") <= maxBucket)
-      .select("band_idx", "band_val")
-    val old = corpusBands.join(keep, Seq("band_idx", "band_val"))
-      .select(col("band_idx"), col("band_val"),
-        col("k").as("key_old"), col("h").as("hash_old"))
-    hashBands(stream, "key", "hash", bands, bandBits)
-      .select(col("band_idx"), col("band_val"),
-        col("k").as("key_new"), col("h").as("hash_new"))
-      .join(old, Seq("band_idx", "band_val"))
-      .filter(col("key_new") =!= col("key_old"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(hash_new ^ hash_old) AS INT)"))
-      .filter(col("hamming") <= maxHam)
-      .select("key_new", "key_old", "band_idx", "hamming")
-  }
-
-  /** Streaming data-quality monitor: the stream sibling of
-    * graft.ops.Quality.checkBlock — per-window violation counts for a
-    * rule set, maintained as ONE watermarked tumbling aggregate (each
-    * rule is a conditional sum column, so adding a rule never adds
-    * state). This is the live version of the batch DQ report: a
-    * dashboard reads the per-window rows; an alert fires when
-    * n_violations/n_checked jumps. */
-  def qualityMonitor(events: DataFrame,
-      checks: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
-    import org.apache.spark.sql.functions.window
-    // the SAME rule-to-aggregate builder the batch DQ report uses —
-    // batch and stream cannot drift on rule semantics
-    val aggs = graft.ops.Quality.ruleAggs(checks, "n_checked", "v_")
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(
-        (col("window.start").as("window_start") +: col("n_checked") +:
-          checks.map { case (nm, _) => col(s"v_$nm") }): _*)
-  }
-
   /** Streaming twin of the FLAGSHIP GSOD ETL (q_gsod_e2e's parse+rollup):
     * raw fixed-layout text lines arrive as a stream (a file tail, a
     * socket, an archive unpacker's output) and flow through the EXACT
@@ -187,13 +97,4 @@ object Streams {
         expr("count(temp)").as("n_temp"),
         expr("count(1)").as("n_obs"))
   }
-
-  /** Streaming twin of q_geo_grid_agg: the map's heat layer maintained
-    * live over a point stream. Delegates to the SAME
-    * [[graft.ops.Geo.gridAggregate]] body the batch query runs, so the
-    * two cannot drift; every aggregate in it (count/min/max/sum) is
-    * mergeable, and state is one row per OCCUPIED grid cell — bounded by
-    * the grid, not the stream. */
-  def gridDensity(points: DataFrame, cellSize: Long): DataFrame =
-    graft.ops.Geo.gridAggregate(points, cellSize)
 }

@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -11,16 +10,6 @@ class MultimodalSpec extends SparkSpec {
       (1L, "abcdefghij" * 20, "en", "web"), // 200 bytes
       (2L, "xy", "en", "web")) // shorter than one frame
       .toDF("doc_id", "text", "lang", "source"))
-
-  test("resize keeps every factor-th byte and updates byte counts") {
-    val r = Multimodal.resizePayload(spark, packed, factor = 2)
-      .orderBy("doc_id").collect()
-    assert(r(0).getInt(2) === 200 && r(0).getInt(3) === 100)
-    val orig = "abcdefghij".getBytes("UTF-8")
-    val resized = r(0).getAs[Array[Byte]]("payload")
-    assert(resized.take(5).toSeq === Seq(orig(0), orig(2), orig(4), orig(6), orig(8)).toSeq)
-    assert(r(1).getInt(3) === 1) // ceil(2/2)
-  }
 
   test("PPM round-trip: encode → decode recovers dims and exact channel means") {
     val rnd = new scala.util.Random(41)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class LinalgSpec extends SparkSpec {
   import spark.implicits._
@@ -48,20 +47,5 @@ class LinalgSpec extends SparkSpec {
     val got = Linalg.spgemm(a, "i", "k", "v", id, "k", "j", "w")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === Set((0L, 0L, 6L), (0L, 1L, 3L), (1L, 2L, 5L)))
-  }
-
-  test("gram is symmetric and matches the explicit transpose product") {
-    val rnd = new scala.util.Random(23)
-    val coo = (1 to 12).map(_ =>
-      (rnd.nextInt(4).toLong, rnd.nextInt(4).toLong, (rnd.nextInt(7) - 3).toLong))
-    val g = Linalg.gram(coo.toDF("i", "j", "v"), "i", "j", "v")
-      .as[(Long, Long, Long)].collect().map { case (a, b, c) => (a, b) -> c }.toMap
-    g.foreach { case ((a, b), c) => assert(g((b, a)) === c, "symmetry") }
-    val viaSpgemm = Linalg.spgemm(
-      coo.map { case (i, j, v) => (j, i, v) }.toDF("i", "k", "v"), // Aᵀ
-      "i", "k", "v",
-      coo.toDF("k", "j", "w"), "k", "j", "w")
-      .as[(Long, Long, Long)].collect().map { case (a, b, c) => (a, b) -> c }.toMap
-    assert(g === viaSpgemm)
   }
 }

@@ -57,27 +57,6 @@ class SinksSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(k"), plan)
   }
 
-  test("range-clustered write produces range-disjoint files (min/max skipping works)") {
-    val dir = Files.createTempDirectory("sinks").toString
-    val orders = graft.Tables.orders(spark, Sf001)
-    Sinks.writeRangeClustered(orders, s"$dir/rc", Seq("o_orderdate"), partitions = 4)
-    // per-file [min,max] date ranges must not overlap — that disjointness
-    // is exactly what lets parquet stats prune a date-range read
-    val ranges = spark.read.parquet(s"$dir/rc")
-      .groupBy(input_file_name().as("f"))
-      .agg(min("o_orderdate").as("lo"), max("o_orderdate").as("hi"))
-      .collect()
-      .map(r => (r.getAs[java.time.LocalDateTime](1), r.getAs[java.time.LocalDateTime](2)))
-      .sortBy(_._1)(Ordering.fromLessThan(_ isBefore _))
-    assert(ranges.length >= 2, s"expected several files, got ${ranges.length}")
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) =>
-        assert(!lo2.isBefore(hi1), s"file ranges overlap: $hi1 vs $lo2")
-      case _ =>
-    }
-    assert(spark.read.parquet(s"$dir/rc").count() === orders.count())
-  }
-
   test("orc and json-lines round-trips preserve rows and types") {
     val dir = Files.createTempDirectory("sinks").toString
     val df = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "n")
@@ -92,40 +71,6 @@ class SinksSpec extends SparkSpec {
       StructField("k", StringType), StructField("n", IntegerType))))
     assert(back.orderBy("k").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
       === Seq(("a", 1), ("b", 2), ("c", 3)))
-  }
-
-  test("xml round-trip preserves rows (Spark 4 built-in source)") {
-    val dir = Files.createTempDirectory("sinks").toString
-    val df = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "n")
-    Sinks.writeXml(df, s"$dir/xml", rowTag = "row")
-    val back = Sinks.readXml(spark, s"$dir/xml", rowTag = "row", StructType(Seq(
-      StructField("k", StringType), StructField("n", IntegerType))))
-    assert(back.orderBy("k").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-      === Seq(("a", 1), ("b", 2), ("c", 3)))
-  }
-
-  test("binaryFile source reads raw bytes; glob prunes at listing time") {
-    val dir = Files.createTempDirectory("binsrc")
-    val payloadA = Array[Byte](1, 2, 3, 4)
-    val payloadB = Array[Byte](9, 8, 7)
-    Files.write(dir.resolve("a.bin"), payloadA)
-    Files.write(dir.resolve("b.bin"), payloadB)
-    Files.write(dir.resolve("skip.txt"), "not binary payload".getBytes)
-    val df = Sinks.readBinaryFiles(spark, dir.toString, glob = "*.bin")
-    val rows = df.select("path", "length", "content")
-      .collect()
-      .map(r => (r.getString(0).split('/').last, r.getLong(1),
-        r.getAs[Array[Byte]](2).toSeq))
-      .sortBy(_._1)
-    assert(rows.map(_._1).toSeq === Seq("a.bin", "b.bin")) // .txt pruned
-    assert(rows(0)._2 === 4L && rows(0)._3 === payloadA.toSeq)
-    assert(rows(1)._2 === 3L && rows(1)._3 === payloadB.toSeq)
-    // the content column feeds the multimodal decode stage directly
-    val packed = df.select(
-      col("length").as("doc_id"), lit("blob").as("kind"),
-      col("content").as("payload"))
-    val decoded = graft.multimodal.Multimodal.decodeFeatures(spark, packed)
-    assert(decoded.count() === 2)
   }
 
   test("parquet schema evolution: mergeSchema unions columns, old files backfill NULL") {

@@ -36,73 +36,6 @@ class StatefulSpec extends SparkSpec {
     assert(last(2L) === ((1L, 1.0)))
   }
 
-  test("streaming CUSUM monitor equals the driver fold across batch boundaries") {
-    implicit val sqlCtx = spark.sqlContext
-    import Stateful.{SeriesPoint, CusumOut}
-    val mem = MemoryStream[SeriesPoint]
-    // mu0=10, slack=2, threshold=15
-    val q = Stateful.cusumMonitor(mem.toDS(), 10L, 2L, 15L)
-      .writeStream.format("memory").queryName("cusum").outputMode("append").start()
-    // key 1 drifts up after seq 5; key 2 stays at the reference level
-    val pts = (1L to 10L).map(i =>
-      SeriesPoint(1L, i, if (i <= 5) 10L else 20L)) ++
-      (1L to 10L).map(i => SeriesPoint(2L, i, 10L + (if (i % 2 == 0) 1 else -1)))
-    try {
-      mem.addData(pts.filter(_.seq <= 6): _*) // split MID-drift
-      q.processAllAvailable()
-      mem.addData(pts.filter(_.seq > 6): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("cusum").as[CusumOut].collect()
-      .map(o => (o.key, o.n_seen) -> ((o.s_plus, o.s_minus, o.alarm))).toMap
-    // driver-side replay of the same fold
-    for (key <- Seq(1L, 2L)) {
-      var (sp, sm) = (0L, 0L)
-      pts.filter(_.key == key).sortBy(_.seq).zipWithIndex.foreach {
-        case (p, i) =>
-          sp = math.max(0L, sp + (p.v - 10L - 2L))
-          sm = math.max(0L, sm + (10L - 2L - p.v))
-          val alarm = if (sp > 15L || sm > 15L) 1 else 0
-          assert(got((key, i + 1L)) === ((sp, sm, alarm)),
-            s"key $key step ${i + 1}")
-      }
-    }
-    // the drifting key alarms, the stationary key never does
-    assert(got.filter(_._1._1 == 1L).values.exists(_._3 == 1))
-    assert(got.filter(_._1._1 == 2L).values.forall(_._3 == 0))
-  }
-
-  test("streaming first-touch equals the batch min per (user, type), correcting late data") {
-    implicit val sqlCtx = spark.sqlContext
-    import Stateful.FirstTouch
-    val mem = MemoryStream[Event]
-    val q = Stateful.firstTouch(mem.toDS())
-      .writeStream.format("memory").queryName("firsts").outputMode("update").start()
-    val all = Seq(
-      Event(10, ts("2024-01-01 10:05:00"), 1, "click", 0),
-      Event(11, ts("2024-01-01 10:06:00"), 1, "view", 0),
-      // batch 2: a LATE click earlier than the first — must correct
-      Event(12, ts("2024-01-01 10:01:00"), 1, "click", 0),
-      Event(13, ts("2024-01-01 10:07:00"), 1, "click", 0), // no emission
-      Event(14, ts("2024-01-01 10:02:00"), 2, "view", 0))
-    try {
-      mem.addData(all.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(all.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val emitted = spark.table("firsts").as[FirstTouch].collect()
-    // the late-corrected click emitted twice; the final state per key is
-    // the earliest, which must equal the batch groupBy-min
-    val lastPer = emitted.groupBy(f => (f.user_id, f.event_type))
-      .map { case (k, fs) => k -> fs.map(f => (f.ts.getTime, f.event_id)).min }
-    val batch = all.groupBy(e => (e.user_id, e.event_type))
-      .map { case (k, es) => k -> es.map(e => (e.ts.getTime, e.event_id)).min }
-    assert(lastPer === batch)
-    assert(emitted.count(f => f.user_id == 1 && f.event_type == "click") === 2,
-      "initial + late correction, and nothing for the later duplicate")
-  }
-
   test("streaming transitions observe pairs across batch boundaries and equal the batch twin") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
@@ -157,279 +90,5 @@ class StatefulSpec extends SparkSpec {
         evs.toDF(), "user_id", "ts", "event_type", "event_id")
       .select("from_type", "to_type").as[(String, String)].collect().toSeq
     assert(batch === streamed)
-  }
-
-  test("a late-arriving view never regresses the carried latest-view state") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Stateful.lastTouchAttribution(mem.toDS())
-      .writeStream.format("memory").queryName("lateattr").outputMode("append").start()
-    try {
-      mem.addData(Event(5, ts("2024-01-01 10:30:00"), 1, "view", 0.0))
-      q.processAllAvailable()
-      // batch 2 delivers an OLDER view late — state must stay at event 5
-      mem.addData(Event(2, ts("2024-01-01 10:00:00"), 1, "view", 0.0))
-      q.processAllAvailable()
-      mem.addData(Event(9, ts("2024-01-01 11:00:00"), 1, "purchase", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("lateattr")
-      .as[(Long, Long, Option[Long], Option[Long])].collect().toSeq
-    assert(rows === Seq((9L, 1L, Some(5L), Some(30L * 60L * 1000000L))))
-  }
-
-  test("streaming attribution credits the carried view across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Stateful.lastTouchAttribution(mem.toDS())
-      .writeStream.format("memory").queryName("attr").outputMode("append").start()
-    try {
-      // batch 1: user 1 views twice then purchases (latest view wins);
-      // user 2 purchases with NO prior view (NULL attribution)
-      mem.addData(
-        Event(1, ts("2024-01-01 10:00:00"), 1, "view", 0.0),
-        Event(2, ts("2024-01-01 10:05:00"), 1, "view", 0.0),
-        Event(3, ts("2024-01-01 10:06:00"), 1, "purchase", 0.0),
-        Event(4, ts("2024-01-01 11:00:00"), 2, "purchase", 0.0))
-      q.processAllAvailable()
-      // batch 2: user 1 purchases again — attributed to the view CARRIED
-      // from batch 1, not reset at the boundary
-      mem.addData(Event(5, ts("2024-01-01 10:30:00"), 1, "purchase", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("attr")
-      .as[(Long, Long, Option[Long], Option[Long])]
-      .collect().toSeq.sortBy(_._1)
-    assert(rows === Seq(
-      (3L, 1L, Some(2L), Some(60L * 1000000L)),
-      (4L, 2L, None, None),
-      (5L, 1L, Some(2L), Some(25L * 60L * 1000000L))))
-  }
-
-  test("kmvHashLocal replays the Kmv.hash48 column expression bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    val df = (1L to 200L).toDF("user_id")
-    val fromExpr = df
-      .select(col("user_id"), graft.ops.Kmv.hash48(col("user_id")))
-      .as[(Long, Long)].collect().toMap
-    (1L to 200L).foreach { i =>
-      assert(Stateful.kmvHashLocal(i) === fromExpr(i), s"user $i")
-    }
-  }
-
-  test("streaming KMV estimate equals the batch sketch after every prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val k = 8
-    def ev(id: Long, uid: Long, tpe: String) =
-      Event(id, ts("2024-01-01 10:00:00"), uid, tpe, 1.0)
-    // batch1: 5 distinct users per type (below k) — complete-set branch;
-    // batch2: pushes "click" to 40 distinct users — estimator branch
-    val batch1 = (1L to 5L).flatMap(u =>
-      Seq(ev(u, u, "click"), ev(100 + u, u, "view")))
-    val batch2 = (6L to 40L).map(u => ev(200 + u, u, "click"))
-    val mem = MemoryStream[Event]
-    val q = Stateful.kmvDistinct(mem.toDS(), k)
-      .writeStream.format("memory").queryName("kmv").outputMode("update").start()
-    try {
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      val mid = spark.table("kmv").as[Stateful.KmvOut].collect()
-        .map(o => o.event_type -> o).toMap
-      // below k: the sketch IS the distinct set
-      assert(mid("click").est === 5L && mid("click").sketch_size === 5)
-      assert(mid("view").est === 5L)
-      mem.addData(batch1.take(4): _*) // replay must be a no-op
-      q.processAllAvailable()
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // final emission per type (last micro-batch that touched it)
-    val emissions = spark.table("kmv").as[Stateful.KmvOut].collect()
-    val finalClick = emissions.filter(_.event_type == "click").last
-    // batch twin over all distinct click users via the column pipeline
-    val users = (batch1 ++ batch2).filter(_.event_type == "click")
-      .map(_.user_id).distinct
-    val sk = graft.ops.Kmv.sketchCols(k, col("h"))
-    val want = users.toDF("user_id")
-      .withColumn("h", graft.ops.Kmv.hash48(col("user_id")))
-      .agg(sk.head, sk.tail: _*)
-      .withColumn("est", graft.ops.Kmv.estimate(k, "hs", "n"))
-      .select("est").as[Long].head()
-    assert(finalClick.est === want)
-    assert(finalClick.sketch_size === k)
-    // replay did not corrupt the view sketch either
-    val finalView = emissions.filter(_.event_type == "view").last
-    assert(finalView.est === 5L)
-  }
-
-  test("streaming Misra-Gries: fold equality, frequency bounds, hot items present") {
-    implicit val sqlCtx = spark.sqlContext
-    val k = 4
-    // skewed stream: user 1 hot, user 2 warm, a long tail of singletons
-    var id = 0L
-    def ev(uid: Long): Event = {
-      id += 1
-      Event(id, ts("2024-01-01 10:00:00"), uid, "click", 1.0)
-    }
-    val batch1 = (1 to 20).map(_ => ev(1)) ++ (1 to 8).map(_ => ev(2)) ++
-      (3L to 12L).map(ev)
-    val batch2 = (1 to 10).map(_ => ev(1)) ++ (1 to 7).map(_ => ev(2)) ++
-      (13L to 22L).map(ev)
-    val mem = MemoryStream[Event]
-    val q = Stateful.misraGries(mem.toDS(), k)
-      .writeStream.format("memory").queryName("mg").outputMode("update").start()
-    try {
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val all = (batch1 ++ batch2).sortBy(e => (e.ts.getTime, e.event_id))
-    val n = all.size.toLong
-    val exact = all.groupBy(_.user_id.toString).map { case (u, xs) =>
-      u -> xs.size.toLong
-    }
-    // final emission = rows at the maximal n_seen
-    val emitted = spark.table("mg").as[Stateful.MgOut].collect()
-    val finals = emitted.filter(_.n_seen == n).map(o => o.item -> o.est).toMap
-    assert(finals.nonEmpty && finals.size <= k)
-    // 1. fold equality: the streamed summary IS the sequential MG fold
-    var local = Map.empty[String, Long]
-    all.foreach { e =>
-      val item = e.user_id.toString
-      local.get(item) match {
-        case Some(c) => local = local.updated(item, c + 1)
-        case None if local.size < k => local = local.updated(item, 1L)
-        case None => local = local.iterator.map { case (i, c) => i -> (c - 1) }
-          .filter(_._2 > 0L).toMap
-      }
-    }
-    assert(finals === local)
-    // 2. Misra-Gries bounds: est <= f <= est + (N - sum est)/(k+1)
-    val slack = (n - finals.values.sum) / (k + 1)
-    finals.foreach { case (item, est) =>
-      val f = exact(item)
-      assert(est <= f && f <= est + slack, s"item $item est=$est f=$f slack=$slack")
-    }
-    // 3. every item with f > N/(k+1) is in the summary
-    exact.filter(_._2 > n / (k + 1)).keys.foreach { hot =>
-      assert(finals.contains(hot), s"hot item $hot missing")
-    }
-  }
-
-  test("aresKeyLocal replays the Router.aresKey column expression bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    val df = (1L to 200L).map(i => (i, 10L + (i % 23))).toDF("doc_id", "w")
-    val fromExpr = df
-      .select(col("doc_id"), graft.ops.Router.aresKey(col("doc_id"), col("w")))
-      .as[(Long, Double)].collect().toMap
-    (1L to 200L).foreach { i =>
-      assert(Stateful.aresKeyLocal(i, 10L + (i % 23)) === fromExpr(i), s"doc $i")
-    }
-  }
-
-  test("streaming weighted reservoir equals the batch top-k after every prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val batch1 = (1L to 30L).map(i => Stateful.DocRow(i, if (i % 2 == 0) "en" else "de", 10 + i))
-    val batch2 = (31L to 60L).map(i => Stateful.DocRow(i, if (i % 2 == 0) "en" else "de", 200 - i))
-    val mem = MemoryStream[Stateful.DocRow]
-    val q = Stateful.weightedReservoir(mem.toDS(), k = 5)
-      .writeStream.format("memory").queryName("resv").outputMode("update").start()
-    try {
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      // replayed rows must be a no-op (pure-function keys + doc dedup)
-      mem.addData(batch1.take(10): _*)
-      q.processAllAvailable()
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // final emission per lang = rows at that lang's max n_seen
-    val emitted = spark.table("resv")
-    val finals = emitted
-      .withColumn("mx", max(col("n_seen")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("lang")))
-      .filter(col("n_seen") === col("mx"))
-      .select("lang", "doc_id").as[(String, Long)].collect()
-      .groupBy(_._1).map { case (l, xs) => l -> xs.map(_._2).toSet }
-    // batch twin: top-5 by the same key over ALL distinct rows, per lang
-    val all = (batch1 ++ batch2).map(r => (r.doc_id, r.lang, r.n_chars)).toDF("doc_id", "lang", "n_chars")
-    val want = all
-      .withColumn("key", graft.ops.Router.aresKey(col("doc_id"), col("n_chars")))
-      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("lang").orderBy(col("key").desc, col("doc_id"))))
-      .filter(col("rn") <= 5)
-      .select("lang", "doc_id").as[(String, Long)].collect()
-      .groupBy(_._1).map { case (l, xs) => l -> xs.map(_._2).toSet }
-    assert(finals === want)
-    // replay didn't inflate the seen count's membership: reservoirs hold k
-    finals.values.foreach(s => assert(s.size === 5))
-  }
-
-  test("decimal18Local replays Spark's double→decimal(38,18) cast bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    val rnd = new scala.util.Random(61)
-    val xs = Seq(0.1, -0.1, 1.0 / 3.0, 2.0, -1e-17, 123.456e10,
-      4.9e-324, -4.9e-324) ++ Seq.fill(200)(rnd.nextGaussian() * 100)
-    val fromCast = xs.toDF("x")
-      .select(col("x"), col("x").cast("decimal(38,18)"))
-      .collect().map(r => r.getDouble(0) -> r.getDecimal(1)).toMap
-    xs.foreach { x =>
-      assert(Stateful.decimal18Local(x).bigDecimal
-        .compareTo(fromCast(x)) === 0, s"x=$x")
-    }
-  }
-
-  test("streaming covariance partials merge to the batch decimal sums after every prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val d = 4
-    val rnd = new scala.util.Random(67)
-    def batch(ids: Range) = ids.map(i =>
-      Stateful.VecRow(i.toLong, Seq.fill(6)(rnd.nextGaussian() * 3)))
-    val batches = Seq(batch(1 to 30), batch(31 to 45), batch(46 to 100))
-    val mem = MemoryStream[Stateful.VecRow]
-    val q = Stateful.covarianceSketch(mem.toDS(), d, segments = 3)
-      .writeStream.format("memory").queryName("cov").outputMode("update")
-      .start()
-    try {
-      var arrived = Seq.empty[Stateful.VecRow]
-      batches.foreach { b =>
-        mem.addData(b: _*)
-        q.processAllAvailable()
-        arrived = arrived ++ b
-        // latest partial per segment, merged by plain decimal addition
-        val parts = spark.table("cov").as[Stateful.CovPartial].collect()
-          .groupBy(_.seg).map(_._2.last).toSeq
-        val width = d + d * (d + 1) / 2
-        val merged = parts.map(_.stats).foldLeft(
-          Vector.fill(width)(BigDecimal(0).setScale(18))) {
-          (a, b) => a.zip(b).map { case (x, y) => x + y }.toVector
-        }
-        assert(parts.map(_.n).sum === arrived.size.toLong)
-        // batch twin: the SAME decimal sums via the column pipeline over
-        // everything arrived so far (Pca.covariance's exact input)
-        val posts = graft.ops.Pca.postings(
-          arrived.map(v => (v.vec_id, v.dims)).toDF("vec_id", "embedding"),
-          "vec_id", "embedding").filter(col("i") <= d).cache()
-        val firsts = posts.groupBy("i")
-          .agg(sum(col("x").cast("decimal(38,18)")).as("s"))
-          .orderBy("i").select("s").collect().map(_.getDecimal(0))
-        val seconds = posts.as("a")
-          .join(posts.as("b"),
-            col("a.__pid") === col("b.__pid") && col("a.i") <= col("b.i"))
-          .groupBy(col("a.i").as("i"), col("b.i").as("j"))
-          .agg(sum((col("a.x") * col("b.x")).cast("decimal(38,18)")).as("s"))
-          .orderBy("i", "j").select("s").collect().map(_.getDecimal(0))
-        val want = (firsts ++ seconds).toVector
-        assert(merged.size === want.size)
-        merged.zip(want).zipWithIndex.foreach { case ((m, w), ix) =>
-          assert(m.bigDecimal.compareTo(w) === 0, s"stat $ix after ${arrived.size} rows")
-        }
-        posts.unpersist()
-      }
-    } finally q.stop()
   }
 }

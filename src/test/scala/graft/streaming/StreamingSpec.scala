@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -140,86 +139,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-static posting probe equals the batch join; foreachBatch pairs equal the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      (100L, "en", Seq("a b c", "b c d", "x y z")),
-      (101L, "en", Seq("a b c", "q r s")),
-      (102L, "de", Seq("a b c"))) // other block — must never match "en" docs
-      .toDF("doc_id", "lang", "sh")
-    val batch1 = Seq((1L, "en", Seq("a b c", "b c d")))
-    val batch2 = Seq((2L, "en", Seq("q r s")), (3L, "de", Seq("a b c")))
-    val mem = MemoryStream[(Long, String, Seq[String])]
-    val docs = mem.toDF().toDF("doc_id", "lang", "sh")
-    // half 1: the stateless stream-static join, append mode, no watermark
-    val q = Streams.corpusPostingMatches(docs, corpus)
-      .writeStream.format("memory").queryName("t_probe").outputMode("append").start()
-    // half 2: per-micro-batch pair aggregation via the BATCH operator
-    val pairBatches = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long, Long, Double)]]
-    val q2 = docs.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-      pairBatches += graft.ops.Dedup
-        .incrementalJaccardPairs(corpus, b, "doc_id", "sh", Seq("lang"))
-        .select("id_new", "id_old", "common", "jac")
-        .as[(Long, Long, Long, Double)].collect().toSeq
-      ()
-    }.start()
-    try {
-      mem.addData(batch1: _*); q.processAllAvailable(); q2.processAllAvailable()
-      mem.addData(batch2: _*); q.processAllAvailable(); q2.processAllAvailable()
-    } finally { q.stop(); q2.stop() }
-    val streamed = spark.table("t_probe")
-      .select("id_new", "id_old", "__sh").as[(Long, Long, String)]
-      .collect().toSet
-    val batchTwin = Streams
-      .corpusPostingMatches((batch1 ++ batch2).toDF("doc_id", "lang", "sh"), corpus)
-      .select("id_new", "id_old", "__sh").as[(Long, Long, String)]
-      .collect().toSet
-    assert(streamed === batchTwin)
-    assert(streamed.contains((3L, 102L, "a b c"))) // de block matches de only
-    assert(!streamed.exists { case (n, o, _) => n == 1L && o == 102L })
-    // the per-batch pairs, unioned, equal the batch operator on all rows
-    val streamedPairs = pairBatches.flatten.toSet
-    val batchPairs = graft.ops.Dedup
-      .incrementalJaccardPairs(corpus,
-        (batch1 ++ batch2).toDF("doc_id", "lang", "sh"), "doc_id", "sh", Seq("lang"))
-      .select("id_new", "id_old", "common", "jac")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(streamedPairs === batchPairs)
-    // doc 1 vs corpus 100: shares both its shingles → jac 2/(2+3-2)
-    assert(streamedPairs.contains((1L, 100L, 2L, 2.0 / 3.0)))
-  }
-
-  test("streaming hash-split routes exactly like the batch split on the same keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    mem.addData(data: _*)
-    val q = Streams.routeBySplit(mem.toDF(), "event_id")
-      .writeStream.format("memory").queryName("t_route").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("t_route")
-      .select("event_id", "split").as[(Long, String)].collect().toMap
-    val batch = Streams.routeBySplit(data.toDF(), "event_id")
-      .select("event_id", "split").as[(Long, String)].collect().toMap
-    assert(streamed === batch)
-    assert(streamed.size === data.size) // stateless: nothing dropped
-  }
-
-  test("streaming quality monitor equals the batch rule counts per window") {
-    val checks = Seq(
-      "zero_val" -> (col("value") === 0.0),
-      "big_val" -> (col("value") > 2.0))
-    val streamed = runStream("t_dq", df => Streams.qualityMonitor(df, checks))
-      .orderBy("window_start")
-      .collect().map(_.toSeq).toSeq
-    val batch = Streams.qualityMonitor(data.toDF(), checks)
-      .orderBy("window_start")
-      .collect().map(_.toSeq).toSeq
-    assert(streamed === batch)
-    // 10h window: events 1,2 (values 1.5, 2.5) → 1 big; 11h: 3,4 → 1 big
-    val byHour = streamed.map(r => (r(1), r(3))) // (n_checked, v_big_val)
-    assert(byHour === Seq((2L, 1L), (2L, 1L), (1L, 0L)))
-  }
-
   test("streaming GSOD parse+rollup equals the batch twin across micro-batches") {
     def line(usaf: String, wban: Int, ymd: String, temp: String,
         prcp: String) =
@@ -257,63 +176,6 @@ class StreamingSpec extends SparkSpec {
     assert(byStation === Set(("A07100", 3L, 3L), ("A07101", 1L, 2L)))
   }
 
-  test("streaming grid density equals the batch rollup across micro-batches") {
-    // two batches landing in overlapping cells: the per-cell state must
-    // MERGE (count adds, min/max fold, sum adds), not overwrite
-    val chunk1 = Seq((1L, 5L, 5L), (2L, 17L, 5L), (3L, 5L, 17L))
-    val chunk2 = Seq((4L, 7L, 7L), (5L, 25L, 25L))
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long)]
-    val q = Streams.gridDensity(
-        mem.toDF().toDF("key", "x", "y"), cellSize = 10L)
-      .writeStream.format("memory").queryName("t_grid")
-      .outputMode("complete").start()
-    try {
-      mem.addData(chunk1: _*)
-      q.processAllAvailable()
-      mem.addData(chunk2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("t_grid").orderBy("cell_x", "cell_y")
-      .collect().map(_.toSeq).toSeq
-    val batch = graft.ops.Geo.gridAggregate(
-        (chunk1 ++ chunk2).toDF("key", "x", "y"), 10L)
-      .orderBy("cell_x", "cell_y").collect().map(_.toSeq).toSeq
-    assert(streamed === batch)
-    // cell (0,0) saw keys 1 and 4 across different micro-batches
-    assert(streamed.head === Seq(0L, 0L, 2L, 1L, 4L, 5L))
-  }
-
-  test("stream-static hamming probe equals the batch pair set") {
-    implicit val sqlCtx = spark.sqlContext
-    // corpus: three 60-bit hashes; two within distance 2 of the probes
-    val h0 = 0x0F0F0F0F0F0F0FL
-    val corpus = Seq((100L, h0), (101L, h0 ^ 3L), (102L, ~h0 & ((1L << 60) - 1)))
-      .toDF("key", "hash")
-    val b1 = Seq((1L, h0 ^ 1L))            // dist 1 to 100, 1 to 101 (1^3=2)
-    val b2 = Seq((2L, h0 ^ 0x30L), (3L, 0x123456789ABCDL)) // 2 to 100, 4 to 101 (cut); far
-    val mem = MemoryStream[(Long, Long)]
-    val stream = mem.toDF().toDF("key", "hash")
-    val q = Streams.hammingMatches(stream, corpus,
-        bands = 4, bandBits = 15, maxHam = 3)
-      .writeStream.format("memory").queryName("t_ham").outputMode("append")
-      .start()
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally { q.stop() }
-    val streamed = spark.table("t_ham")
-      .select("key_new", "key_old", "hamming").distinct()
-      .as[(Long, Long, Int)].collect().toSet
-    // batch twin over the SAME rows (same builder, static plan)
-    val batchTwin = Streams
-      .hammingMatches((b1 ++ b2).toDF("key", "hash"), corpus,
-        bands = 4, bandBits = 15, maxHam = 3)
-      .select("key_new", "key_old", "hamming").distinct()
-      .as[(Long, Long, Int)].collect().toSet
-    assert(streamed === batchTwin)
-    assert(streamed === Set((1L, 100L, 1), (1L, 101L, 1), (2L, 100L, 2)))
-  }
   test("checkpoint restart: file-sink tumbling agg is exactly-once across stop/restart") {
     // The fault-tolerance contract the memory-sink replays cannot prove:
     // a watermarked aggregation writing to a FILE sink, stopped mid-

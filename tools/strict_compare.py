@@ -5,6 +5,7 @@ by all columns, and cells must match INCLUDING python type (so a
 Decimal-vs-float64 divergence fails here exactly like the driver's hash).
 
 Usage: python3 tools/strict_compare.py <sfDir> <verifyOutDir>
+Exits 1 when any query fails, 0 otherwise.
 Dev-only tool — not part of the library.
 """
 import json
@@ -89,6 +90,7 @@ def main():
     dirs = {p.name for p in Path(out_dir).iterdir() if p.is_dir()}
     print(f"{n_pass} pass, {n_fail} fail, "
           f"{len(dirs - set(oracles))} rows-only")
+    sys.exit(1 if n_fail else 0)
 
 
 if __name__ == "__main__":
