@@ -226,6 +226,14 @@ object Dedup {
         "sz_b" :+ "jac").map(col): _*)
   }
 
+  /** Exploded posting projection — (blockCols…, id_<side>, sz_<side>,
+    * __sh) — of both sides of the incremental join. */
+  private[graft] def postings(df: DataFrame, id: String, shingleCol: String,
+      blockCols: Seq[String], side: String): DataFrame = df.select(
+    (blockCols.map(col) :+ col(id).as(s"id_$side") :+
+      size(col(shingleCol)).as(s"sz_$side") :+
+      explode(col(shingleCol)).as("__sh")): _*)
+
   /** Incremental near-dup: score an INCOMING batch against an EXISTING
     * corpus — the daily-ingest shape a production dedup actually runs
     * (nobody re-self-joins 100 TB because a day of data arrived). Same
@@ -248,14 +256,6 @@ object Dedup {
     * than silently shuffling the corpus — at that size it is not an
     * increment, it is a corpus, and the caller should run
     * [[jaccardPairs]] on the union instead. */
-  /** Exploded posting projection — (blockCols…, id_<side>, sz_<side>,
-    * __sh) — of both sides of the incremental join. */
-  private[graft] def postings(df: DataFrame, id: String, shingleCol: String,
-      blockCols: Seq[String], side: String): DataFrame = df.select(
-    (blockCols.map(col) :+ col(id).as(s"id_$side") :+
-      size(col(shingleCol)).as(s"sz_$side") :+
-      explode(col(shingleCol)).as("__sh")): _*)
-
   def incrementalJaccardPairs(corpus: DataFrame, incoming: DataFrame,
       id: String, shingleCol: String, blockCols: Seq[String]): DataFrame = {
     def posts(df: DataFrame, side: String) =

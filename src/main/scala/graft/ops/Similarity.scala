@@ -955,6 +955,19 @@ object Similarity {
         ((col("__r") + col("__cross")) === 0).cast("int").as("keep"))
   }
 
+  /** Band projection of [[hammingPairs]] — ONE definition of "the
+    * bands". Output: (k, h, band_idx, band_val). */
+  def hashBands(hashes: DataFrame, keyCol: String, hashCol: String,
+      bands: Int, bandBits: Int): DataFrame = {
+    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
+    hashes.select(col(keyCol).cast("long").as("k"),
+        col(hashCol).cast("long").as("h"))
+      .select(col("k"), col("h"),
+        posexplode(array((0 until bands).map { b =>
+          expr(s"shiftrightunsigned(h, ${b * bandBits}) & $mask")
+        }: _*)).as(Seq("band_idx", "band_val")))
+  }
+
   /** All pairs of 64-bit hashes within Hamming distance `maxHam`, via
     * band-equality blocking — the bit-domain LSH the SimHash/MinHash
     * dedups use, packaged for perceptual image hashes
@@ -977,19 +990,6 @@ object Similarity {
     * a bit-63 hash (valid: hashes are signed-long bitmaps) bands
     * correctly. Output: (key_a, key_b, hash_a, hash_b, hamming),
     * key_a < key_b, each qualifying pair once. */
-  /** Band projection of [[hammingPairs]] — ONE definition of "the
-    * bands". Output: (k, h, band_idx, band_val). */
-  def hashBands(hashes: DataFrame, keyCol: String, hashCol: String,
-      bands: Int, bandBits: Int): DataFrame = {
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    hashes.select(col(keyCol).cast("long").as("k"),
-        col(hashCol).cast("long").as("h"))
-      .select(col("k"), col("h"),
-        posexplode(array((0 until bands).map { b =>
-          expr(s"shiftrightunsigned(h, ${b * bandBits}) & $mask")
-        }: _*)).as(Seq("band_idx", "band_val")))
-  }
-
   def hammingPairs(hashes: DataFrame, keyCol: String, hashCol: String,
       bands: Int, bandBits: Int, maxHam: Int,
       maxBucket: Int = 1024): DataFrame = {
